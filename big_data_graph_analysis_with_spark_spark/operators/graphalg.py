@@ -61,13 +61,12 @@ _NARROW_LOCAL = threading.local()
 @contextmanager
 def _narrow_shuffle(graph: NetGraph, n_vertices: int | None = None):
     """Narrow the CHECKPOINT width of a driver round loop over a small
-    graph (same rationale as plans/pipeline: a stage-heavy fixpoint on
-    a sub-100k-vertex frame pays more in task scheduling at full width
-    than it gains in parallelism; AQE coalesces shuffle reads, but its
-    `parallelismFirst` floor keeps them at ~defaultParallelism pieces,
-    so checkpointed loop iterates would stay 32-wide and every
-    subsequent round schedules 32 tasks per stage on frames of a few
-    thousand rows).
+    graph (a stage-heavy fixpoint on a sub-100k-vertex frame pays more
+    in task scheduling at full width than it gains in parallelism; AQE
+    coalesces shuffle reads, but its `parallelismFirst` floor keeps them
+    at ~defaultParallelism pieces, so checkpointed loop iterates would
+    stay 32-wide and every subsequent round schedules 32 tasks per
+    stage on frames of a few thousand rows).
 
     Scoping: this no longer touches `spark.sql.shuffle.partitions` —
     it arms a THREAD-LOCAL width that `_ckpt` (the loop-materialization

@@ -54,6 +54,7 @@ from __future__ import annotations
 
 import math
 import os
+import shutil
 import tempfile
 import weakref
 
@@ -84,7 +85,8 @@ _ADJ_CACHE_MAX = 4
 # Driver-side sideload reuse: the same (immutable) NetGraph walked again
 # — repeated pipeline runs, bench iterations — reuses its already-written
 # sideload instead of re-materializing child_map. Weak keys: the path
-# entry dies with the graph object. Content can never go stale because a
+# entry dies with the graph object (and the dir too, for an explicit
+# cache_key; see ensure_sideload). Content can never go stale because a
 # NetGraph's frames are immutable and each write gets a fresh dir.
 _SIDELOAD_PATHS: "weakref.WeakKeyDictionary[NetGraph, str]" = (
     weakref.WeakKeyDictionary()
@@ -199,6 +201,13 @@ def ensure_sideload(
     their long-lived ORIGINAL object so repeated runs over the same
     graph write the child_map exactly once. Content can never go stale:
     a NetGraph's frames are immutable and each write gets a fresh dir.
+    An explicit `cache_key` also owns the dir: it is deleted when the
+    key is garbage-collected (or at interpreter exit), so a long-lived
+    driver does not accumulate them. Such a caller must materialize
+    whatever reads the sideload while it holds the key (run_pipeline
+    checkpoints its walk steps). Without a `cache_key` the dir outlives
+    `pg`: run_walks / node2vec_walks return lazy frames that may read
+    it after their graph argument is gone.
     """
     key = cache_key if cache_key is not None else pg
     adj_path = _SIDELOAD_PATHS.get(key)
@@ -216,6 +225,8 @@ def ensure_sideload(
         adj_path
     )
     _SIDELOAD_PATHS[key] = adj_path
+    if cache_key is not None:
+        weakref.finalize(cache_key, shutil.rmtree, scratch, True)
     return adj_path
 
 

@@ -28,8 +28,13 @@ single-map batches entirely; we accumulate from ≥1).
 
 Scale notes: `matches` is localCheckpointed each round — iterative
 lineage otherwise grows unboundedly and re-executes every prior round
-at each action. Walk steps persist once and feed both SimRank rounds
-and the final walk classification.
+at each action. The round-invariant inputs (walk steps, the per-walk
+visited sets, the identity seed, og in-degrees) are localCheckpointed
+once, not cached: AQE sizes a checkpointed frame from its bytes, but
+it may not coalesce a cached plan's output
+(`spark.sql.optimizer.canChangeCachedPlanOutputPartitioning` is false
+in Spark 4.1), so a cached frame keeps the full shuffle width and
+every round's scan of it schedules one task per partition.
 """
 
 from __future__ import annotations
@@ -70,7 +75,6 @@ def run_pipeline(
     pg = pg.persist()
     n_pg = pg.num_vertices()
 
-    visited: DataFrame | None = None
     try:
         # distributed draw — start-node ids stay cluster-side; only the
         # count reaches the driver (round-3 collected every start id)
@@ -83,7 +87,7 @@ def run_pipeline(
         )
         walk_steps = walk_steps.localCheckpoint()  # run the kernel exactly once
 
-        visited = walks.walk_visited_sets(walk_steps).persist()
+        visited = walks.walk_visited_sets(walk_steps).localCheckpoint()
 
         # round-invariant SimRank inputs, materialized ONCE: the
         # identity seed (10-attribute fingerprint join) appears 3-4×
@@ -131,8 +135,6 @@ def run_pipeline(
         if yaml_path:
             write_yaml_stats(spark, stat_block, yaml_path)
     finally:
-        if visited is not None:
-            visited.unpersist()
         og.unpersist()
         pg.unpersist()
     return PipelineResult(

@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import os
 
+from pyspark.errors import PySparkRuntimeError
 from pyspark.sql import SparkSession
 
 _DEFAULTS = {
@@ -102,7 +103,15 @@ def get_spark(
     manager is configured, so the same entry points run on a laptop, in
     tests, and under spark-submit on a real cluster (where `master` is
     supplied externally and must be left None).
+
+    The defaults, `shuffle_partitions` and `extra_conf` apply only when
+    this call creates the session. A live session is returned as it
+    is, so whoever created it keeps the conf they chose.
     """
+    try:
+        return SparkSession.active()
+    except PySparkRuntimeError:
+        pass  # no session yet: build one below
     builder = SparkSession.builder.appName(app_name)
     if master is None and "SPARK_MASTER" not in os.environ:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
