@@ -26,7 +26,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..model import NetGraph
-from .matching import classify_matches, uncovered_valuable
+from .matching import classify_matches, match_class_counts, uncovered_valuable
+
+#: id-list length above which the YAML lists a prefix and the total
+MAX_LISTED_IDS = 100_000
 
 
 def classify_walks(walks: DataFrame, classified_matches: DataFrame) -> DataFrame:
@@ -79,14 +82,15 @@ def walk_counts(walk_classes: DataFrame) -> DataFrame:
 
 def _ids_str(df: DataFrame, col: str, cap: int) -> str:
     """Sorted id list for the YAML block, bounded: the collect is a
-    distributed sort+limit of at most `cap` rows (valuable-node counts
-    scale with the graph, so an uncapped collect would be the one
+    distributed sort+limit of at most `cap` + 1 rows (valuable-node
+    counts scale with the graph, so an uncapped collect would be the one
     data-sized driver materialization left in the pipeline). Beyond the
-    cap the YAML records the prefix plus the exact total."""
-    total = df.count()
-    ids = [r[0] for r in df.select(col).orderBy(col).limit(cap).collect()]
-    body = ", ".join(str(i) for i in ids)
-    if total > cap:
+    cap the YAML records the prefix plus the exact total, which costs
+    one more count."""
+    ids = [r[0] for r in df.select(col).orderBy(col).limit(cap + 1).collect()]
+    body = ", ".join(str(i) for i in ids[:cap])
+    if len(ids) > cap:
+        total = df.count()
         body += f", ... ({total} total)"
         logging.getLogger(__name__).warning(
             "stats id list %r truncated to %d of %d ids", col, cap, total
@@ -95,49 +99,39 @@ def _ids_str(df: DataFrame, col: str, cap: int) -> str:
 
 
 def assemble_stats(
-    og: NetGraph,
-    matches: DataFrame,
-    walks: DataFrame | None,
-    threshold: float,
-    max_listed_ids: int = 100_000,
+    og: NetGraph, matches: DataFrame, walks: DataFrame, threshold: float
 ) -> dict[str, str]:
     """The 8-metric statistics block (`Main.scala:204-212`), as an
-    ordered dict ready for the YAML sink.
+    ordered dict ready for the YAML sink, in four Spark actions: one per
+    id list, one for the TP/FP counts, one for the per-partition walk
+    counts.
 
-    Driver-side collect is correct here: the id lists are capped at
-    `max_listed_ids` (reference-identical below the cap) and every
+    `walks`: (partition_key, walk_id, visited array<long>). Driver-side
+    collect is correct here: the id lists are capped at
+    `MAX_LISTED_IDS` (reference-identical below the cap) and every
     other input is an aggregate bounded by |matches| / #partitions,
     not by data scale.
     """
-    classified = classify_matches(matches, threshold).cache()
+    counts = match_class_counts(matches, threshold).first()
+    per_part = (
+        walk_counts(classify_walks(walks, classify_matches(matches, threshold)))
+        .orderBy("partition_key")
+        .collect()
+    )
     valuable = og.vertices.filter(F.col("valuable_data")).select("id")
-    tp = classified.filter(F.col("is_true_positive"))
-    fp = classified.filter(~F.col("is_true_positive"))
-
-    stats: dict[str, str] = {
-        "valuableOriginalNodeIds": _ids_str(valuable, "id", max_listed_ids),
+    return {
+        "valuableOriginalNodeIds": _ids_str(valuable, "id", MAX_LISTED_IDS),
         "uncoveredValuableNodeIds": _ids_str(
-            uncovered_valuable(matches, og), "id", max_listed_ids
+            uncovered_valuable(matches, og), "id", MAX_LISTED_IDS
         ),
-        "numTruePositiveMatches": str(tp.count()),
-        "numFalsePositiveMatches": str(fp.count()),
-    }
-
-    if walks is not None:
-        per_part = (
-            walk_counts(classify_walks(walks, classified))
-            .orderBy("partition_key")
-            .collect()
-        )
-        stats["successfulWalksPerPartition"] = str(
+        "numTruePositiveMatches": str(counts["n_true_positive"]),
+        "numFalsePositiveMatches": str(counts["n_false_positive"]),
+        "successfulWalksPerPartition": str(
             {int(r["partition_key"]): int(r["n_successful"]) for r in per_part}
-        )
-        stats["unsuccessfulWalksPerPartition"] = str(
+        ),
+        "unsuccessfulWalksPerPartition": str(
             {int(r["partition_key"]): int(r["n_unsuccessful"]) for r in per_part}
-        )
-        stats["totalSuccessfulWalks"] = str(sum(r["n_successful"] for r in per_part))
-        stats["totalUnsuccessfulWalks"] = str(
-            sum(r["n_unsuccessful"] for r in per_part)
-        )
-    classified.unpersist()
-    return stats
+        ),
+        "totalSuccessfulWalks": str(sum(r["n_successful"] for r in per_part)),
+        "totalUnsuccessfulWalks": str(sum(r["n_unsuccessful"] for r in per_part)),
+    }

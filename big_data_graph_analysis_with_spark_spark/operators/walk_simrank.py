@@ -20,7 +20,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..model import NetGraph
-from .simrank import init_scores
 
 
 def walk_induced_edges(pg: NetGraph, walk_nodes: DataFrame) -> DataFrame:
@@ -40,9 +39,9 @@ def walk_simrank_round(
     pg: NetGraph,
     og: NetGraph,
     walk_nodes: DataFrame,
-    matches: DataFrame | None = None,
-    identity: DataFrame | None = None,
-    og_indeg: DataFrame | None = None,
+    matches: DataFrame | None,
+    identity: DataFrame,
+    og_indeg: DataFrame,
 ) -> DataFrame:
     """One Jacobi sweep per walk subgraph, all walks at once.
 
@@ -54,54 +53,50 @@ def walk_simrank_round(
     `matches` plays the accumulator: fallback scores for parent pairs
     (`HelperFunction.scala:246-247`) and G6 pruning of already-matched
     nodes, pushed into the edge tables before the propagation join.
+    `identity` (pg_id, og_id, 1.0) and `og_indeg` (dst, dn) are the
+    round-invariant seed and og in-degrees, materialized once by the
+    caller.
 
-    `identity` / `og_indeg` optionally supply the ROUND-INVARIANT
-    frames precomputed (and materialized) by the caller: the identity
-    seed appears 3-4× in every round's plan and the og in-degree table
-    once — a round loop that recomputes them pays the 10-attribute
-    vertex join and the og edge aggregation num_rounds× for nothing
-    (r12, guide §5 caching). Semantics are identical: both default to
-    the same in-plan derivation.
+    The identity seed takes precedence over a fallback score for the
+    same pair, and over a computed score in the output. Both overlays
+    are one max-aggregate per (walk_id, pg_id, og_id) over the union,
+    which is exact because the seed is 1.0 and no other score exceeds
+    1.0: a fallback score is a prior round's output, and a computed
+    score is round(Σ/(dp·dn), 2) where Σ sums at most dp·dn parent-pair
+    scores, each at most 1.0.
     """
-    if identity is None:
-        identity = init_scores(pg, og)  # (pg_id, og_id, 1.0)
-
+    key = ["walk_id", "pg_id", "og_id"]
     # per-walk identity seed: restrict to nodes the walk visited
     walk_identity = walk_nodes.join(
         identity, on=walk_nodes.id == identity.pg_id
-    ).select("walk_id", "pg_id", "og_id", "score")
+    ).select(*key, "score")
 
-    scores = walk_identity
-    if matches is not None:
-        # accumulator fallback for parent pairs absent from the seed
-        fallback = (
-            walk_nodes.join(
-                matches.select("pg_id", "og_id", "score"),
-                on=walk_nodes.id == matches.pg_id,
-            )
-            .select("walk_id", "pg_id", "og_id", "score")
-            .join(
-                walk_identity.select("walk_id", "pg_id", "og_id"),
-                on=["walk_id", "pg_id", "og_id"],
-                how="left_anti",
-            )
+    def over_identity(df: DataFrame) -> DataFrame:
+        return (
+            df.unionByName(walk_identity)
+            .groupBy(*key)
+            .agg(F.max("score").alias("score"))
         )
-        scores = walk_identity.unionByName(fallback)
 
     induced = walk_induced_edges(pg, walk_nodes)
     wedges = induced
     og_fwd = og.edges.select(
         F.col("src").alias("og_id"), F.col("dst").alias("og_child")
     )
+    scores = walk_identity
     if matches is not None:
+        # accumulator fallback for parent pairs; the seed wins a tie
+        scores = over_identity(
+            walk_nodes.join(matches, on=walk_nodes.id == matches.pg_id).select(
+                *key, "score"
+            )
+        )
         # G6 prune pushed into the propagation (see simrank.simrank_round)
         wedges = wedges.join(
-            matches.select(F.col("pg_id").alias("dst")).distinct(),
-            on="dst",
-            how="left_anti",
+            matches.select(F.col("pg_id").alias("dst")), on="dst", how="left_anti"
         )
         og_fwd = og_fwd.join(
-            matches.select(F.col("og_id").alias("og_child")).distinct(),
+            matches.select(F.col("og_id").alias("og_child")),
             on="og_child",
             how="left_anti",
         )
@@ -113,8 +108,6 @@ def walk_simrank_round(
     walk_indeg = induced.groupBy("walk_id", "dst").agg(
         F.count("*").alias("dp")
     )
-    if og_indeg is None:
-        og_indeg = og.edges.groupBy("dst").agg(F.count("*").alias("dn"))
 
     contrib = (
         scores.join(
@@ -142,9 +135,4 @@ def walk_simrank_round(
         )
         .filter(F.col("score") != 0)
     )
-
-    return computed.join(
-        walk_identity.select("walk_id", "pg_id", "og_id"),
-        on=["walk_id", "pg_id", "og_id"],
-        how="left_anti",
-    ).unionByName(walk_identity)
+    return over_identity(computed)

@@ -55,7 +55,6 @@ class PipelineResult:
     stats: dict[str, str]
     matches: DataFrame
     walk_steps: DataFrame
-    rounds_run: int = 0
     per_round_match_counts: list[int] = field(default_factory=list)
 
 
@@ -126,12 +125,7 @@ def run_pipeline(
                 per_round_counts.append(matches.count())
 
         assert matches is not None
-        walks_for_stats = walk_steps.groupBy("partition_key", "walk_id").agg(
-            F.collect_list("node_id").alias("visited")
-        )
-        stat_block = stats.assemble_stats(
-            og, matches, walks_for_stats, cfg.node_match_threshold
-        )
+        stat_block = stats.assemble_stats(og, matches, visited, cfg.node_match_threshold)
         if yaml_path:
             write_yaml_stats(spark, stat_block, yaml_path)
     finally:
@@ -141,6 +135,5 @@ def run_pipeline(
         stats=stat_block,
         matches=matches,
         walk_steps=walk_steps,
-        rounds_run=cfg.num_rounds,
         per_round_match_counts=per_round_counts,
     )

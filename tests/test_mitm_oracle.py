@@ -3,9 +3,11 @@
 The pairs come from `perfbench/gen.py` and the expected statistics from
 `perfbench/oracle.py`, a pure-Python re-derivation that shares no code
 with the engine. The YAML the CLI writes must equal the oracle exactly.
-The same pairs also pin two resource properties of `run_pipeline`: how
-wide its Spark stages run, and that its walk sideload dirs do not
-outlive the graphs they belong to.
+The same pairs also pin resource properties of the pipeline: how wide
+its Spark stages run, how many Spark jobs ingest and the statistics
+block take, and that its walk sideload dirs do not outlive the graphs
+they belong to. One unit test pins the identity precedence of
+`walk_simrank_round`.
 """
 
 from __future__ import annotations
@@ -15,9 +17,14 @@ from dataclasses import replace
 
 import pytest
 import yaml
+from pyspark.sql import functions as F
 
 from big_data_graph_analysis_with_spark_spark import __main__ as cli
 from big_data_graph_analysis_with_spark_spark.config import SimConfig
+from big_data_graph_analysis_with_spark_spark.model import EDGE_SCHEMA, VERTEX_SCHEMA, NetGraph
+from big_data_graph_analysis_with_spark_spark.operators import stats, walks
+from big_data_graph_analysis_with_spark_spark.operators.simrank import init_scores
+from big_data_graph_analysis_with_spark_spark.operators.walk_simrank import walk_simrank_round
 from big_data_graph_analysis_with_spark_spark.plans.pipeline import run_pipeline
 from big_data_graph_analysis_with_spark_spark.sources.ngs_text import load_graph
 from perfbench import gen, oracle
@@ -79,6 +86,18 @@ def _sim_config(cfg: dict) -> SimConfig:
     )
 
 
+def _jobs_in_group(spark, group: str, fn):
+    """Run `fn` under its own Spark job group: (its result, the job ids)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, sc.statusTracker().getJobIdsForGroup(group)
+
+
 def test_round_loop_stages_run_narrower_than_shuffle_width(spark, tmp_path):
     """On a 60-vertex pair every stage of the pipeline holds a few KB, so
     AQE should size every stage below the session's shuffle width. A
@@ -88,17 +107,12 @@ def test_round_loop_stages_run_narrower_than_shuffle_width(spark, tmp_path):
     og_path, pg_path = _pair(tmp_path, BASE_SPEC, BASE_CFG["seed"])
     og, pg = load_graph(spark, og_path), load_graph(spark, pg_path)
     width = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    sc = spark.sparkContext
-    group = "run_pipeline-stage-width"
-    sc.setJobGroup(group, "run_pipeline stage widths")
-    try:
-        run_pipeline(spark, og, pg, _sim_config(BASE_CFG))
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    tracker = sc.statusTracker()
-    job_ids = tracker.getJobIdsForGroup(group)
+    _, job_ids = _jobs_in_group(
+        spark, "run_pipeline-stage-width",
+        lambda: run_pipeline(spark, og, pg, _sim_config(BASE_CFG)),
+    )
     assert job_ids, "no job ran under the test's job group"
+    tracker = spark.sparkContext.statusTracker()
     ran = {}
     for jid in job_ids:
         for sid in tracker.getJobInfo(jid).stageIds:
@@ -124,3 +138,54 @@ def test_sideload_dirs_die_with_their_graphs(spark, tmp_path, monkeypatch):
     del kept, og, pg
     gc.collect()
     assert list(scratch.glob("bdga_walk_adj_*")) == []
+
+
+def _graph(spark, ids, edges) -> NetGraph:
+    return NetGraph(
+        spark.createDataFrame([(i, 1, 1, 1, 1, 1, 1, 1, 0.5, False) for i in ids], VERTEX_SCHEMA),
+        spark.createDataFrame([(a, b, 0, 0, 0, None, 0.1) for a, b in edges], EDGE_SCHEMA),
+    )
+
+
+def test_walk_simrank_round_identity_wins(spark):
+    """Pair (0, 0) is an identity seed (1.0) and a prior match (0.4);
+    (2, 2) is a seed and computes to 0.5 (one pg parent, two og parents);
+    (4, 5) is only a prior match. The seed must win on both sides of the
+    sweep: as the parent score of (0, 0)'s children, which compute to
+    1.0 (0.4 if the fallback won, 1.4 if both rows were kept), and in the
+    output, where (2, 2) stays 1.0. A fallback-only pair is an input,
+    never an output."""
+    pg = _graph(spark, [0, 1, 2, 4, 8], [(0, 1), (1, 2), (0, 8)])
+    og = _graph(spark, [0, 1, 2, 3, 5, 9], [(0, 1), (1, 2), (3, 2), (0, 9)])
+    walk_nodes = spark.createDataFrame([(7, i) for i in (0, 1, 2, 4, 8)], "walk_id LONG, id LONG")
+    matches = spark.createDataFrame([(0, 0, 0.4), (4, 5, 0.7)], "pg_id LONG, og_id LONG, score DOUBLE")
+    og_indeg = og.edges.groupBy("dst").agg(F.count("*").alias("dn"))
+    out = walk_simrank_round(pg, og, walk_nodes, matches, init_scores(pg, og), og_indeg).collect()
+    got = {(r["pg_id"], r["og_id"]): r["score"] for r in out}
+    assert len(out) == len(got) and {r["walk_id"] for r in out} == {7}
+    assert got == {
+        (0, 0): 1.0, (1, 1): 1.0, (2, 2): 1.0,
+        (1, 9): 1.0, (8, 1): 1.0, (8, 9): 1.0,
+    }
+
+
+def test_ingest_and_stats_job_counts(spark, tmp_path):
+    """Loading one dump validates it in one aggregate action, and the
+    statistics block takes four actions (two id lists, the TP/FP counts,
+    the per-partition walk counts). AQE runs each shuffle stage as its
+    own job, so on this 60-vertex pair the load takes 2 jobs and the
+    block 14-16, depending on which stage AQE sees finish first; the
+    bound on the block leaves 2 jobs of slack for that. A loader that
+    runs one action per check takes 6 jobs, and a block that caches the
+    classified matches and counts TP and FP separately takes 24."""
+    og_path, pg_path = _pair(tmp_path, BASE_SPEC, BASE_CFG["seed"])
+    og, load_jobs = _jobs_in_group(spark, "ngs_text-load", lambda: load_graph(spark, og_path))
+    assert len(load_jobs) <= 2
+    res = run_pipeline(spark, og, load_graph(spark, pg_path), _sim_config(BASE_CFG))
+    visited = walks.walk_visited_sets(res.walk_steps).localCheckpoint()
+    block, stats_jobs = _jobs_in_group(
+        spark, "stats-assemble",
+        lambda: stats.assemble_stats(og, res.matches, visited, BASE_CFG["threshold"]),
+    )
+    assert block == res.stats
+    assert len(stats_jobs) <= 18

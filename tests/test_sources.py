@@ -89,6 +89,63 @@ def test_missing_init_node_raises(spark):
         parse_graph_text(spark, text)
 
 
+def _node(i: int) -> str:
+    return f"NodeObject({i},0,0,1,0,0,0,0,0.1,false)"
+
+
+def _action(src: int, dst: int) -> str:
+    return f"Action(1,{_node(src)},{_node(dst)},0,1,None,0.5)"
+
+
+@pytest.mark.parametrize(
+    "text,match",
+    [
+        # an endpoint that is not a vertex would parse into a dangling edge
+        (f"List({_node(0)}, {_node(1)}):List({_action(0, 9)})", "endpoint id 9 "),
+        # a duplicate id would parse into two vertices with one id
+        (f"List({_node(0)}, {_node(1)}, {_node(1)}):List({_action(0, 1)})", "vertex id 1 "),
+        # a truncated trailing Action( would be silently dropped
+        (
+            f"List({_node(0)}, {_node(1)}):List({_action(0, 1)}, Action(1,{_node(0)}",
+            r"malformed Action object: Action\(1,NodeObject\(0,",
+        ),
+        # a truncated NodeObject( leaves null fields
+        (f"List({_node(0)}, NodeObject(1,0,0):List({_action(0, 1)})", "1 node tuple"),
+    ],
+    ids=["missing_endpoint", "duplicate_id", "truncated_action", "truncated_node"],
+)
+def test_malformed_dump_raises(spark, text, match):
+    with pytest.raises(GraphParseError, match=match):
+        parse_graph_text(spark, text)
+
+
+def test_multi_dump_ids_are_checked_per_dump(spark, tmp_path):
+    """In a multi-dump file an id may recur across dumps (a node
+    perturbed between dumps keeps both variants), but not within one."""
+    from big_data_graph_analysis_with_spark_spark.sources.ngs_text import load_graph_dumps
+
+    dump = f"List({_node(0)}, {_node(1)}):List({_action(0, 1)})"
+    variant = dump.replace(_node(1), "NodeObject(1,0,0,1,0,0,0,0,0.7,false)")
+    ok = tmp_path / "ok.txt"
+    ok.write_text(f"{dump}\n{variant}\n")
+    assert sorted(r["id"] for r in load_graph_dumps(spark, str(ok)).vertices.collect()) == [0, 1, 1]
+    bad = tmp_path / "bad.txt"
+    bad.write_text(f"{dump}\n{dump.replace('List(', f'List({_node(1)}, ', 1)}\n")
+    with pytest.raises(GraphParseError, match="vertex id 1 "):
+        load_graph_dumps(spark, str(bad))
+
+
+def test_parsed_frames_parse_each_object_once(spark, tmp_path):
+    """Reading vertices or edges parses each object once: no filter
+    inferred from the explode re-runs the parse below it."""
+    f = tmp_path / "g.txt"
+    f.write_text(f"List({_node(0)}, {_node(1)}):List({_action(0, 1)})")
+    g = load_graph(spark, str(f))
+    for df in (g.vertices, g.edges):
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        assert "Filter" not in plan, plan
+
+
 def test_concatenated_multi_dump_ingest(spark, tmp_path):
     """N dumps concatenated line-per-dump parse distributively to the
     union graph: vertices/edges equal the distinct union of the graphs

@@ -15,6 +15,7 @@ from big_data_graph_analysis_with_spark_spark.config import SimConfig
 from big_data_graph_analysis_with_spark_spark.operators import topology, walks
 from big_data_graph_analysis_with_spark_spark.plans.pipeline import run_pipeline
 from big_data_graph_analysis_with_spark_spark.sources.ngs_text import load_graph
+from perfbench import gen
 from tests.conftest import REF_INPUT
 
 CFG = SimConfig(
@@ -25,9 +26,19 @@ CFG = SimConfig(
 )
 
 
-@pytest.fixture(scope="module")
-def graph20(spark):
-    return load_graph(spark, f"{REF_INPUT}/Graph20.0.txt")
+@pytest.fixture(scope="module", params=["Graph20.0.txt", "gen60"])
+def graph20(spark, request, tmp_path_factory):
+    """A small walk graph: the reference's Graph20 dump, and a seeded
+    60-vertex `perfbench/gen.py` dump that needs no reference input."""
+    if request.param == "gen60":
+        out = tmp_path_factory.mktemp("gen60")
+        spec = gen.GraphSpec(
+            vertices=60, out_degree=2.0, sink_fraction=0.1, perturbation=0.1,
+            valuable_fraction=0.5,
+        )
+        gen.generate(spec, 7, str(out), formats=("text",))
+        return load_graph(spark, str(out / "perturbed.txt"))
+    return load_graph(spark, f"{REF_INPUT}/{request.param}")
 
 
 @pytest.fixture(scope="module")
