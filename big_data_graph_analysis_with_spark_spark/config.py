@@ -30,6 +30,9 @@ class SimConfig:
     seed: int = 42
 
     def __post_init__(self) -> None:
+        for name in ("num_of_parallel_walks", "num_iters_per_comp_node", "iters_before_accum"):
+            if getattr(self, name) < 1:
+                raise ValueError(f"{name} must be >= 1, got {getattr(self, name)}")
         if self.iters_before_accum > self.num_iters_per_comp_node:
             raise ValueError(
                 "iters_before_accum must be <= num_iters_per_comp_node "

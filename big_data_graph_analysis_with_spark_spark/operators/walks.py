@@ -183,7 +183,9 @@ def ensure_sideload(
     cache_key: NetGraph | None = None,
 ) -> str:
     """Materialize (or reuse) the executor-side adjacency sideload for
-    `pg` and return its path.
+    a graph `pg` and return its path. The walk kernels read it for the
+    graph they walk; the per-walk SimRank kernel reads one for each
+    side of a pair (walk_simrank.walk_simrank_round).
 
     Adjacency is aggregated cluster-side (topology.child_map: one
     groupBy, children pre-sorted for seeded-rng determinism) and
@@ -205,9 +207,10 @@ def ensure_sideload(
     key is garbage-collected (or at interpreter exit), so a long-lived
     driver does not accumulate them. Such a caller must materialize
     whatever reads the sideload while it holds the key (run_pipeline
-    checkpoints its walk steps). Without a `cache_key` the dir outlives
-    `pg`: run_walks / node2vec_walks return lazy frames that may read
-    it after their graph argument is gone.
+    checkpoints its walk steps and each round's matches). Without a
+    `cache_key` the dir outlives the graph: run_walks / node2vec_walks
+    return lazy frames that may read it after their graph argument is
+    gone.
     """
     key = cache_key if cache_key is not None else pg
     adj_path = _SIDELOAD_PATHS.get(key)

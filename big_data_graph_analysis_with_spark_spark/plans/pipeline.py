@@ -12,10 +12,20 @@ and the accumulator (G9). Per round r:
 1. walks with ``walk_id ∈ [r·B, (r+1)·B)`` (all generated up front in
    one seeded `applyInPandas` pass — walk generation never depends on
    match state, only on partition-local visited history);
-2. per-walk SimRank against the whole original graph, with the global
-   `matches` table as accumulator fallback + G6 prune;
+2. per-walk SimRank against the whole original graph: one grouped-map
+   kernel over all walks of the round (`walk_simrank.walk_simrank_round`),
+   with the global `matches` table as accumulator fallback. Its sums are
+   integer cents, exact because every input score is 1.0 or a prior
+   ``round(·, 2)``; the og-side G6 prune is a post-filter, exact because
+   an output pair sums only contributions to its own og node and ``dn``
+   counts the unpruned in-edges;
 3. merged candidates → G7 best-match → G8 valuable filter →
    global max-merge into `matches`.
+
+Neither graph reaches the driver: both child maps are written once as
+parquet sideloads (`walks.ensure_sideload`, keyed on the caller's graph
+objects, which own the dirs), read by the walk kernel (pg) and the
+SimRank kernel (pg and og) on the workers.
 
 The DataFrame `matches` table gives the accumulator's *intended*
 semantics (global max-merge, README.md:142) deterministically — the
@@ -29,9 +39,9 @@ single-map batches entirely; we accumulate from ≥1).
 Scale notes: `matches` is localCheckpointed each round — iterative
 lineage otherwise grows unboundedly and re-executes every prior round
 at each action. The round-invariant inputs (walk steps, the per-walk
-visited sets, the identity seed, og in-degrees) are localCheckpointed
-once, not cached: AQE sizes a checkpointed frame from its bytes, but
-it may not coalesce a cached plan's output
+visited sets, the identity seed) are localCheckpointed once, not
+cached: AQE sizes a checkpointed frame from its bytes, but it may not
+coalesce a cached plan's output
 (`spark.sql.optimizer.canChangeCachedPlanOutputPartitioning` is false
 in Spark 4.1), so a cached frame keeps the full shuffle width and
 every round's scan of it schedules one task per partition.
@@ -67,9 +77,9 @@ def run_pipeline(
     collect_round_counts: bool = False,
 ) -> PipelineResult:
     # the caller's graph objects are the STABLE cache identity for the
-    # walk-adjacency sideload; the persist() wrappers below are fresh
+    # adjacency sideloads; the persist() wrappers below are fresh
     # objects every call and would defeat the reuse registry
-    pg_key = pg
+    pg_key, og_key = pg, og
     og = og.persist()
     pg = pg.persist()
     n_pg = pg.num_vertices()
@@ -80,25 +90,20 @@ def run_pipeline(
         assignments = walks.sample_start_assignments_dist(
             spark, topology.start_nodes(pg), cfg
         )
-        adj_path = walks.ensure_sideload(pg, num_vertices=n_pg, cache_key=pg_key)
+        pg_adj = walks.ensure_sideload(pg, num_vertices=n_pg, cache_key=pg_key)
+        og_adj = walks.ensure_sideload(og, cache_key=og_key)
         walk_steps = walks.run_walks(
-            spark, pg, assignments, cfg, num_vertices=n_pg, adj_path=adj_path
+            spark, pg, assignments, cfg, num_vertices=n_pg, adj_path=pg_adj
         )
         walk_steps = walk_steps.localCheckpoint()  # run the kernel exactly once
 
         visited = walks.walk_visited_sets(walk_steps).localCheckpoint()
 
-        # round-invariant SimRank inputs, materialized ONCE: the
-        # identity seed (10-attribute fingerprint join) appears 3-4×
-        # in every round's plan and the og in-degree table once per
-        # round — recomputing them num_rounds× was pure redundant
-        # work (r12, guide §5; results identical by construction)
+        # the identity seed (10-attribute fingerprint join) is
+        # round-invariant: materialized ONCE, not per round
         from ..operators.simrank import init_scores
 
         identity = init_scores(pg, og).localCheckpoint()
-        og_indeg = (
-            og.edges.groupBy("dst").agg(F.count("*").alias("dn"))
-        ).localCheckpoint()
 
         matches: DataFrame | None = None
         per_round_counts: list[int] = []
@@ -114,8 +119,7 @@ def run_pipeline(
                 )
             )
             scores = walk_simrank.walk_simrank_round(
-                pg, og, round_nodes, matches,
-                identity=identity, og_indeg=og_indeg,
+                round_nodes, matches, identity, pg_adj, og_adj
             )
             candidates = scores.select("pg_id", "og_id", "score")
             best = matching.best_match(candidates, pg, og)

@@ -4,10 +4,11 @@ The pairs come from `perfbench/gen.py` and the expected statistics from
 `perfbench/oracle.py`, a pure-Python re-derivation that shares no code
 with the engine. The YAML the CLI writes must equal the oracle exactly.
 The same pairs also pin resource properties of the pipeline: how wide
-its Spark stages run, how many Spark jobs ingest and the statistics
-block take, and that its walk sideload dirs do not outlive the graphs
-they belong to. One unit test pins the identity precedence of
-`walk_simrank_round`.
+its Spark stages run, how many Spark jobs ingest, one SimRank round and
+the statistics block take, and that its adjacency sideload dirs do not
+outlive the graphs they belong to. One unit test pins the identity
+precedence of `walk_simrank_round`, and one that the CLI rejects walk
+settings that cannot run before it starts Spark.
 """
 
 from __future__ import annotations
@@ -22,7 +23,7 @@ from pyspark.sql import functions as F
 from big_data_graph_analysis_with_spark_spark import __main__ as cli
 from big_data_graph_analysis_with_spark_spark.config import SimConfig
 from big_data_graph_analysis_with_spark_spark.model import EDGE_SCHEMA, VERTEX_SCHEMA, NetGraph
-from big_data_graph_analysis_with_spark_spark.operators import stats, walks
+from big_data_graph_analysis_with_spark_spark.operators import matching, stats, walks
 from big_data_graph_analysis_with_spark_spark.operators.simrank import init_scores
 from big_data_graph_analysis_with_spark_spark.operators.walk_simrank import walk_simrank_round
 from big_data_graph_analysis_with_spark_spark.plans.pipeline import run_pipeline
@@ -78,6 +79,18 @@ def test_cli_yaml_equals_oracle(spark, tmp_path, case):
     assert got == want
 
 
+@pytest.mark.parametrize("args", [
+    ["--accum", "0"], ["--iters", "-1", "--accum", "-2"], ["--walks", "0"],
+])
+def test_cli_rejects_bad_walk_settings_before_spark(monkeypatch, args):
+    def no_spark(*_, **__):
+        raise AssertionError("get_spark was called")
+
+    monkeypatch.setattr(cli, "get_spark", no_spark)
+    with pytest.raises(ValueError, match="must be >= 1"):
+        cli.main(["--original", "og.txt", "--perturbed", "pg.txt", "--out", "out.yaml", *args])
+
+
 def _sim_config(cfg: dict) -> SimConfig:
     return SimConfig(
         random_walk_coeff=cfg["coeff"], num_of_parallel_walks=cfg["walks"],
@@ -124,6 +137,8 @@ def test_round_loop_stages_run_narrower_than_shuffle_width(spark, tmp_path):
 
 
 def test_sideload_dirs_die_with_their_graphs(spark, tmp_path, monkeypatch):
+    """Each run writes two child-map sideloads, pg's and og's, and each
+    dir is deleted once the caller's graph object is collected."""
     scratch = tmp_path / "scratch"
     scratch.mkdir()
     monkeypatch.setenv("SPARK_GRAFT_SCRATCH", str(scratch))
@@ -134,7 +149,7 @@ def test_sideload_dirs_die_with_their_graphs(spark, tmp_path, monkeypatch):
         og, pg = load_graph(spark, og_path), load_graph(spark, pg_path)
         run_pipeline(spark, og, pg, replace(cfg, seed=seed))
         kept.append((og, pg))
-    assert len(list(scratch.glob("bdga_walk_adj_*"))) == 3
+    assert len(list(scratch.glob("bdga_walk_adj_*"))) == 6
     del kept, og, pg
     gc.collect()
     assert list(scratch.glob("bdga_walk_adj_*")) == []
@@ -159,8 +174,8 @@ def test_walk_simrank_round_identity_wins(spark):
     og = _graph(spark, [0, 1, 2, 3, 5, 9], [(0, 1), (1, 2), (3, 2), (0, 9)])
     walk_nodes = spark.createDataFrame([(7, i) for i in (0, 1, 2, 4, 8)], "walk_id LONG, id LONG")
     matches = spark.createDataFrame([(0, 0, 0.4), (4, 5, 0.7)], "pg_id LONG, og_id LONG, score DOUBLE")
-    og_indeg = og.edges.groupBy("dst").agg(F.count("*").alias("dn"))
-    out = walk_simrank_round(pg, og, walk_nodes, matches, init_scores(pg, og), og_indeg).collect()
+    adj = [walks.ensure_sideload(g, cache_key=g) for g in (pg, og)]
+    out = walk_simrank_round(walk_nodes, matches, init_scores(pg, og), *adj).collect()
     got = {(r["pg_id"], r["og_id"]): r["score"] for r in out}
     assert len(out) == len(got) and {r["walk_id"] for r in out} == {7}
     assert got == {
@@ -189,3 +204,31 @@ def test_ingest_and_stats_job_counts(spark, tmp_path):
     )
     assert block == res.stats
     assert len(stats_jobs) <= 18
+
+
+def test_simrank_round_job_count(spark, tmp_path):
+    """One SimRank round with prior matches (the later-round plan):
+    the grouped kernel, best match, the valuable filter and the merge
+    checkpoint. AQE runs each shuffle stage as its own job; on this
+    60-vertex pair the round takes 14, and the bound leaves 2 jobs of
+    slack. The declarative 3-way join plan took 29-30."""
+    og_path, pg_path = _pair(tmp_path, BASE_SPEC, BASE_CFG["seed"])
+    og, pg = load_graph(spark, og_path), load_graph(spark, pg_path)
+    cfg = _sim_config(BASE_CFG)
+    res = run_pipeline(spark, og, pg, cfg)
+    nodes = walks.walk_visited_sets(res.walk_steps).select(
+        (F.col("partition_key") * cfg.num_iters_per_comp_node + F.col("walk_id")).alias("walk_id"),
+        F.explode("visited").alias("id"),
+    ).localCheckpoint()
+    identity = init_scores(pg, og).localCheckpoint()
+    # the pipeline's own sideloads, keyed on the same graph objects
+    adj = [walks.ensure_sideload(g, cache_key=g) for g in (pg, og)]
+
+    def one_round():
+        scores = walk_simrank_round(nodes, res.matches, identity, *adj)
+        best = matching.best_match(scores.select("pg_id", "og_id", "score"), pg, og)
+        valuable = matching.valuable_matches(best, og)
+        return matching.merge_matches(res.matches, valuable).localCheckpoint()
+
+    _, jobs = _jobs_in_group(spark, "walk_simrank-round", one_round)
+    assert len(jobs) <= 16
