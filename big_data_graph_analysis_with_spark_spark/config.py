@@ -11,6 +11,7 @@ read via `GraphConfigReader.scala:6-13`. Invariant
 
 from __future__ import annotations
 
+import math
 from dataclasses import dataclass
 
 
@@ -37,6 +38,16 @@ class SimConfig:
             raise ValueError(
                 "iters_before_accum must be <= num_iters_per_comp_node "
                 "(reference invariant, Main.scala:49)"
+            )
+        # a zero or NaN quota empties every walk, and Spark orders a NaN
+        # threshold above every score: both would yield a silent all-zero run
+        if not (math.isfinite(self.random_walk_coeff) and self.random_walk_coeff > 0):
+            raise ValueError(
+                f"random_walk_coeff must be finite and > 0, got {self.random_walk_coeff}"
+            )
+        if not math.isfinite(self.node_match_threshold):
+            raise ValueError(
+                f"node_match_threshold must be finite, got {self.node_match_threshold}"
             )
 
     @property

@@ -31,9 +31,6 @@ reproduces results bit-for-bit:
 
 from __future__ import annotations
 
-import threading
-from contextlib import contextmanager
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -45,56 +42,11 @@ PR_SCALE = 1_000_000_000_000
 PR_DAMP_NUM = 85
 PR_DAMP_DEN = 100
 
-#: below this vertex count an iterative operator narrows the session's
-#: shuffle width for the duration of its driver loop
-_NARROW_THRESHOLD = 100_000
-_NARROW_WIDTH = 8
-
-
-#: thread-local narrowing state — scoped to THIS operator call on THIS
-#: thread, never the session (round-10 verdict task 7: the previous
-#: conf set/restore narrowed every concurrent query that planned while
-#: an iterative operator's context was open)
-_NARROW_LOCAL = threading.local()
-
-
-@contextmanager
-def _narrow_shuffle(graph: NetGraph, n_vertices: int | None = None):
-    """Narrow the CHECKPOINT width of a driver round loop over a small
-    graph (a stage-heavy fixpoint on a sub-100k-vertex frame pays more
-    in task scheduling at full width than it gains in parallelism; AQE
-    coalesces shuffle reads, but its `parallelismFirst` floor keeps them
-    at ~defaultParallelism pieces, so checkpointed loop iterates would
-    stay 32-wide and every subsequent round schedules 32 tasks per
-    stage on frames of a few thousand rows).
-
-    Scoping: this no longer touches `spark.sql.shuffle.partitions` —
-    it arms a THREAD-LOCAL width that `_ckpt` (the loop-materialization
-    helper every operator here routes through) applies as a
-    `coalesce()` under each localCheckpoint. A concurrent query on the
-    same session is untouched; results are unaffected, all operators
-    here are partitioning-deterministic."""
-    n = n_vertices if n_vertices is not None else graph.vertices.count()
-    prev = getattr(_NARROW_LOCAL, "width", None)
-    # Arm OR DISARM explicitly: a nested call on a ≥-threshold graph
-    # inside an outer small-graph context must not inherit the outer
-    # narrow width, or _ckpt would coalesce edge-sized iterates of the
-    # big graph to _NARROW_WIDTH partitions (r11 advice). `prev` is
-    # still restored in `finally`, so the outer context is unaffected.
-    _NARROW_LOCAL.width = _NARROW_WIDTH if n < _NARROW_THRESHOLD else None
-    try:
-        yield n
-    finally:
-        _NARROW_LOCAL.width = prev
-
-
 def _ckpt(df: DataFrame) -> DataFrame:
-    """Materialize a shared frame EAGERLY: localCheckpoint, coalesced
-    to the armed narrow width when a `_narrow_shuffle` context is open
-    on this thread. The coalesce folds into the frame's final stage (no
-    extra shuffle) and fixes the checkpointed RDD's partition count, so
-    every later round reads/schedules `_NARROW_WIDTH` tasks instead of
-    the session's full width. Use via ``.transform(_ckpt)`` to keep
+    """Materialize a shared frame EAGERLY with localCheckpoint. AQE
+    sizes the frame's last shuffle from its bytes, and the checkpointed
+    RDD keeps the partition count AQE chose, so every later round
+    schedules that many tasks. Use via ``.transform(_ckpt)`` to keep
     method chains.
 
     Eager is the right shape for frames consumed MORE THAN ONCE inside
@@ -103,8 +55,7 @@ def _ckpt(df: DataFrame) -> DataFrame:
     of one job can be computed per branch before the block lands. Loop
     iterates whose very next action is their own probe use
     `_ckpt_lazy` instead."""
-    w = getattr(_NARROW_LOCAL, "width", None)
-    return (df.coalesce(w) if w else df).localCheckpoint()
+    return df.localCheckpoint()
 
 
 def _ckpt_lazy(df: DataFrame) -> DataFrame:
@@ -116,11 +67,8 @@ def _ckpt_lazy(df: DataFrame) -> DataFrame:
     logical plan is truncated to a LogicalRDD exactly as with `_ckpt`.
     Only safe where the first job that touches the frame references it
     once (loop iterates do; shared self-join frames do not — use
-    `_ckpt`). (The temporary R12_CKPT_EAGER A/B knob is gone — r13:
-    the paired measurement is done, lazy won, and an env knob read at
-    import time silently ignored in-process toggling anyway.)"""
-    w = getattr(_NARROW_LOCAL, "width", None)
-    return (df.coalesce(w) if w else df).localCheckpoint(eager=False)
+    `_ckpt`)."""
+    return df.localCheckpoint(eager=False)
 
 
 def _empty(df: DataFrame) -> bool:
@@ -132,53 +80,6 @@ def _empty(df: DataFrame) -> bool:
     vertex-bounded, so the full count of a frame the round must
     materialize anyway is not extra work."""
     return df.count() == 0
-
-
-def _narrowed(fn):
-    """Decorator: run an iterative operator inside _narrow_shuffle —
-    every driver-loop action in the body executes at the narrow width,
-    and the returned frame is localCheckpoint-materialized INSIDE the
-    context (several operators end on a lazy aggregation — closeness,
-    path counts, betweenness; without the checkpoint that last stage
-    would execute after the width is restored)."""
-    import functools
-
-    def _already_materialized(df: DataFrame) -> bool:
-        # an EAGERLY localCheckpointed frame's logical plan is a
-        # LogicalRDD scan over a checkpointed RDD, possibly under
-        # Project/alias wrappers (an operator returning
-        # checkpointed.select(...)) — re-checkpointing that shape would
-        # just copy the materialized partitions again. A LAZILY-marked
-        # frame (`_ckpt_lazy`) is ALSO a LogicalRDD but its RDD is not
-        # yet checkpointed — `rdd.isCheckpointed()` distinguishes the
-        # two (r12 advice: treating any LogicalRDD as materialized let
-        # pagerank-family operators return unmaterialized lazy chains,
-        # which a two-branch caller would recompute per branch).
-        try:
-            node = df._jdf.queryExecution().logical()
-            while True:
-                name = node.getClass().getSimpleName()
-                if name == "LogicalRDD":
-                    return bool(node.rdd().isCheckpointed())
-                if name in ("Project", "SubqueryAlias") and (
-                    node.children().size() == 1
-                ):
-                    node = node.children().head()
-                    continue
-                return False
-        except Exception:
-            return False
-
-    @functools.wraps(fn)
-    def wrapper(graph, *args, **kwargs):
-        with _narrow_shuffle(graph):
-            out = fn(graph, *args, **kwargs)
-            if isinstance(out, DataFrame) and not _already_materialized(out):
-                out = out.transform(_ckpt)
-            return out
-
-    return wrapper
-
 
 
 def _sym_edges(und):
@@ -260,7 +161,6 @@ def triangle_counts(graph: NetGraph) -> DataFrame:
     )
 
 
-@_narrowed
 def connected_components(
     graph: NetGraph,
     max_iters: int = 50,
@@ -326,7 +226,6 @@ def connected_components(
     return labels
 
 
-@_narrowed
 def pagerank(
     graph: NetGraph, iters: int = 4, edges_stable: bool = False
 ) -> DataFrame:
@@ -437,7 +336,6 @@ def clustering_coefficient(graph: NetGraph) -> DataFrame:
     )
 
 
-@_narrowed
 def label_propagation(
     graph: NetGraph, rounds: int = 3, sym_edges: DataFrame | None = None
 ) -> DataFrame:
@@ -547,7 +445,6 @@ def link_prediction(
     )
 
 
-@_narrowed
 def ktruss_edges(graph: NetGraph, k: int = 4, rounds: int = 5) -> DataFrame:
     """(a, b): edges of the k-truss — the maximal subgraph where every
     edge is supported by ≥ k−2 triangles — after `rounds` peels. The
@@ -611,7 +508,6 @@ def ktruss_edges(graph: NetGraph, k: int = 4, rounds: int = 5) -> DataFrame:
     return out
 
 
-@_narrowed
 def hits_scores(
     graph: NetGraph, rounds: int = 2, edges_stable: bool = False
 ) -> DataFrame:
@@ -751,7 +647,6 @@ def degree_histogram(graph: NetGraph) -> DataFrame:
     )
 
 
-@_narrowed
 def bfs_distances(
     graph: NetGraph,
     source: int | None = None,
@@ -807,7 +702,6 @@ def bfs_distances(
     return visited
 
 
-@_narrowed
 def kcore_vertices(
     graph: NetGraph,
     k: int = 3,
@@ -854,7 +748,6 @@ def kcore_vertices(
     return keep.select(F.col("id").cast("long").alias("id"))
 
 
-@_narrowed
 def sssp_distances(
     graph: NetGraph,
     weight: "F.Column | None" = None,
@@ -925,7 +818,6 @@ def sssp_distances(
     return dist.select("id", F.col("d").cast("long").alias("dist_scaled"))
 
 
-@_narrowed
 def personalized_pagerank(
     graph: NetGraph,
     source: int | None = None,
@@ -1019,7 +911,6 @@ def _bfs_sym(edges_sym: DataFrame, source: int, max_iters: int) -> DataFrame:
     return visited
 
 
-@_narrowed
 def diameter_double_sweep(
     graph: NetGraph,
     max_iters: int = 64,
@@ -1057,7 +948,6 @@ def diameter_double_sweep(
     )
 
 
-@_narrowed
 def scc_components(
     graph: NetGraph,
     extra_edges: DataFrame | None = None,
@@ -1291,7 +1181,6 @@ def scc_components(
     )
 
 
-@_narrowed
 def maximal_independent_set(graph: NetGraph, rounds: int = 6) -> DataFrame:
     """(id, mis_round): a maximal independent set of the canonical
     undirected graph via Luby's algorithm (Luby, SICOMP 1986) with
@@ -1370,7 +1259,6 @@ def maximal_independent_set(graph: NetGraph, rounds: int = 6) -> DataFrame:
     )
 
 
-@_narrowed
 def closeness_sampled(
     graph: NetGraph,
     n_seeds: int = 4,
@@ -1451,7 +1339,6 @@ def closeness_sampled(
     )
 
 
-@_narrowed
 def path_counts(
     graph: NetGraph,
     source: int | None = None,
@@ -1523,7 +1410,6 @@ def path_counts(
     return visited
 
 
-@_narrowed
 def betweenness_sampled(
     graph: NetGraph,
     n_seeds: int = 4,
@@ -1647,7 +1533,6 @@ def betweenness_sampled(
     return out.groupBy("id").agg(F.sum("delta").alias("betweenness"))
 
 
-@_narrowed
 def pagerank_weighted(graph: NetGraph, iters: int = 4) -> DataFrame:
     """(id, pr_scaled): cost-weighted fixed-point PageRank — the
     random surfer follows each out-edge with probability proportional
@@ -2918,7 +2803,6 @@ def scc_size_profile(
     )
 
 
-@_narrowed
 def kcore_census(graph: NetGraph, k: int = 3, rounds: int = 8) -> DataFrame:
     """(n_nodes, n_edges): size of the k-core — the maximal subgraph
     of the undirected simple graph in which every vertex keeps degree
@@ -3013,7 +2897,6 @@ def kcore_census(graph: NetGraph, k: int = 3, rounds: int = 8) -> DataFrame:
     )
 
 
-@_narrowed
 def degree_assortativity_inputs(graph: NetGraph) -> DataFrame:
     """(n_edges, s_sum, s_prod, s_sq): Newman degree-assortativity
     sufficient statistics over the undirected simple graph — for every
@@ -3065,7 +2948,6 @@ def degree_assortativity_inputs(graph: NetGraph) -> DataFrame:
     )
 
 
-@_narrowed
 def rich_club_census(graph: NetGraph) -> DataFrame:
     """(degree_bits, n_nodes_ge, n_edges_ge): rich-club sufficient
     statistics at bit-length degree thresholds — for each occupied

@@ -32,11 +32,12 @@ which collects and broadcasts the whole graph through the driver
 (`Main.scala:72-73`) and then does a **linear scan of the edge list
 per step** (`:316-318`). On a cluster the sideload path lives on the
 shared FS (HDFS/S3) and executors fetch it exactly like any input
-split. This is still the one operator that needs the whole graph in
-memory *per executor* (a walk can reach anywhere), so the ceiling is
-executor RAM — ≤ a few GB of adjacency per walk job; everything
-downstream (subgraph induction, SimRank, matching, stats) is pure
-DataFrame algebra and scales independently.
+split. A walk can reach anywhere, so this kernel needs the whole
+graph's adjacency in memory *per executor*, and the ceiling is
+executor RAM — ≤ a few GB of adjacency per walk job. The per-walk
+SimRank kernel (walk_simrank) has the same ceiling, twice over: it
+reads the sideloads of both graphs of a pair on each worker.
+Matching and stats are DataFrame algebra and scale independently.
 
 Above that per-executor memory ceiling a second tier takes over
 (:func:`run_walks_frontier`, dispatched by vertex count in
@@ -52,6 +53,7 @@ handles and the small path's trajectories never change.
 
 from __future__ import annotations
 
+import atexit
 import math
 import os
 import shutil
@@ -72,7 +74,7 @@ WALK_SCHEMA = "partition_key LONG, walk_id LONG, step LONG, node_id LONG"
 #: above this vertex count run_walks dispatches to the frontier-join
 #: tier — the per-worker adjacency index (dict of |V| lists, roughly
 #: 100 bytes/vertex + 16 bytes/edge) no longer fits a normally-sized
-#: executor. Overridable per call (tests force it to 0).
+#: executor.
 FRONTIER_TIER_THRESHOLD = 50_000_000
 
 # Per-worker adjacency cache: Python workers are reused across tasks, so
@@ -208,9 +210,9 @@ def ensure_sideload(
     driver does not accumulate them. Such a caller must materialize
     whatever reads the sideload while it holds the key (run_pipeline
     checkpoints its walk steps and each round's matches). Without a
-    `cache_key` the dir outlives the graph: run_walks / node2vec_walks
-    return lazy frames that may read it after their graph argument is
-    gone.
+    `cache_key` the dir outlives the graph, since run_walks /
+    node2vec_walks return lazy frames that may read it after their
+    graph argument is gone; it is deleted at interpreter exit.
     """
     key = cache_key if cache_key is not None else pg
     adj_path = _SIDELOAD_PATHS.get(key)
@@ -230,6 +232,8 @@ def ensure_sideload(
     _SIDELOAD_PATHS[key] = adj_path
     if cache_key is not None:
         weakref.finalize(cache_key, shutil.rmtree, scratch, True)
+    else:
+        atexit.register(shutil.rmtree, scratch, True)
     return adj_path
 
 
@@ -240,7 +244,6 @@ def run_walks(
     cfg: SimConfig,
     num_vertices: int | None = None,
     adj_path: str | None = None,
-    frontier_threshold: int | None = None,
 ) -> DataFrame:
     """All walks for all partitions: (partition_key, walk_id, step, node_id).
 
@@ -248,24 +251,19 @@ def run_walks(
     rounds); the driver loop slices rounds by
     ``walk_id // iters_before_accum``.
 
-    Dispatch: below ``frontier_threshold`` vertices (default
-    FRONTIER_TIER_THRESHOLD) the sideload kernel runs — the small
+    Dispatch: up to FRONTIER_TIER_THRESHOLD vertices the sideload
+    kernel runs — the small
     path, whose seeded trajectories are pinned by tests and never
     change. Above it, :func:`run_walks_frontier` takes over: same walk
     semantics (quota, sink termination, cross-walk exploration bias),
     O(frontier) executor memory, per-step frontier joins.
     """
     n_v = num_vertices if num_vertices is not None else pg.num_vertices()
-    thr = (
-        frontier_threshold
-        if frontier_threshold is not None
-        else FRONTIER_TIER_THRESHOLD
-    )
     # an explicitly-passed adj_path pins the sideload tier (matching
     # node2vec_walks): the caller already paid the sideload write, and
     # the tiers' RNG streams differ — silently switching would both
     # waste that write and change trajectories
-    if adj_path is None and n_v > thr:
+    if adj_path is None and n_v > FRONTIER_TIER_THRESHOLD:
         return run_walks_frontier(spark, pg, assignments, cfg, num_vertices=n_v)
     quota = cfg.random_walk_coeff * n_v
     n_iters = cfg.num_iters_per_comp_node
@@ -318,7 +316,6 @@ def run_walks_frontier(
     assignments: DataFrame,
     cfg: SimConfig,
     num_vertices: int | None = None,
-    child_map_df: DataFrame | None = None,
 ) -> DataFrame:
     """Extreme-scale walk tier: (partition_key, walk_id, step, node_id)
     with the SAME semantics as the sideload kernel — per partition,
@@ -360,17 +357,16 @@ def run_walks_frontier(
     max_len = max_walk_len(cfg, n_v)
     n_iters = cfg.num_iters_per_comp_node
     seed = cfg.seed
+    # materialize the child map ONCE — every per-step join probes it,
+    # and without the checkpoint each probe would re-run the full
+    # groupBy+collect_list over the edge set (one whole child-map
+    # recomputation per hop on the tier meant for graphs too big to
+    # index per-worker)
     cmap = (
-        child_map_df
-        if child_map_df is not None
-        # materialize the derived child map ONCE — every per-step join
-        # probes it, and without the checkpoint each probe would re-run
-        # the full groupBy+collect_list over the edge set (one whole
-        # child-map recomputation per hop on the tier meant for graphs
-        # too big to index per-worker). A caller-supplied frame (e.g. a
-        # bucketed catalog table) is used as-is.
-        else topology.child_map(pg).localCheckpoint(eager=False)
-    ).select(F.col("id").alias("__cm_id"), "children")
+        topology.child_map(pg)
+        .localCheckpoint(eager=False)
+        .select(F.col("id").alias("__cm_id"), "children")
+    )
 
     starts = assignments.select("partition_key", "start_id").localCheckpoint(
         eager=False
@@ -540,7 +536,6 @@ def node2vec_walks(
     q: float = 1.0,
     seed: int = 0,
     adj_path: str | None = None,
-    frontier_threshold: int | None = None,
 ) -> DataFrame:
     """(start_id, rep, step, node_id): second-order biased random walks
     (Grover & Leskovec, KDD 2016) from every vertex — the walk-corpus
@@ -562,21 +557,15 @@ def node2vec_walks(
     is (L+1)·reps·|V| narrow rows — the dominant cost is writing the
     corpus, as it should be.
 
-    Above ``frontier_threshold`` vertices (default
-    FRONTIER_TIER_THRESHOLD, same dispatch as `run_walks`) the
-    sideload never materializes: :func:`node2vec_walks_frontier` steps
+    Above FRONTIER_TIER_THRESHOLD vertices (same dispatch as
+    `run_walks`) the sideload never materializes: :func:`node2vec_walks_frontier` steps
     every walk by joining the walk-state frame against the child-map
     table — O(walk-state) memory per executor, no whole-graph
     residency anywhere. Trajectories between the tiers differ
     (numpy-stream vs counter-hash RNG), so the threshold sits far
     above every small-tier graph.
     """
-    thr = (
-        frontier_threshold
-        if frontier_threshold is not None
-        else FRONTIER_TIER_THRESHOLD
-    )
-    if adj_path is None and pg.num_vertices() > thr:
+    if adj_path is None and pg.num_vertices() > FRONTIER_TIER_THRESHOLD:
         return node2vec_walks_frontier(
             spark, pg, walks_per_vertex, walk_length, p, q, seed
         )
@@ -654,7 +643,6 @@ def node2vec_walks_frontier(
     p: float = 1.0,
     q: float = 1.0,
     seed: int = 0,
-    child_map_df: DataFrame | None = None,
 ) -> DataFrame:
     """Extreme-scale node2vec tier: same walk semantics as the kernel
     (second-order p/q bias, first step uniform, directed, sinks stop)
@@ -683,12 +671,12 @@ def node2vec_walks_frontier(
 
     from ..functions.hashing import hash56
 
+    # materialized once — both per-step probes (cur + prev) reuse it
     cmap = (
-        child_map_df
-        if child_map_df is not None
-        # materialized once — both per-step probes (cur + prev) reuse it
-        else topology.child_map(pg).localCheckpoint(eager=False)
-    ).select(F.col("id").alias("__cm_id"), "children")
+        topology.child_map(pg)
+        .localCheckpoint(eager=False)
+        .select(F.col("id").alias("__cm_id"), "children")
+    )
     w_back = max(1, round(1_000_000 / float(p)))
     w_common = 1_000_000
     w_else = max(1, round(1_000_000 / float(q)))

@@ -444,20 +444,6 @@ def test_motif_counts_mutual_triangle(spark):
     assert row["n_directed"] == 6
 
 
-def test_narrow_shuffle_restores_on_error(spark):
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    g = _graph(spark, [1, 2], [(1, 2)])
-    try:
-        with graphalg._narrow_shuffle(g):
-            assert spark.conf.get("spark.sql.shuffle.partitions") == str(
-                graphalg._NARROW_WIDTH
-            )
-            raise RuntimeError("boom")
-    except RuntimeError:
-        pass
-    assert spark.conf.get("spark.sql.shuffle.partitions") == prev
-
-
 def test_condensation_contracts_cycles_to_dag(spark):
     # cycle {1,2,3} → 4 → cycle {5,6}; condensation: 3 → 4 → 6
     g = _graph(

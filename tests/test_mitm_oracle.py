@@ -6,15 +6,22 @@ with the engine. The YAML the CLI writes must equal the oracle exactly.
 The same pairs also pin resource properties of the pipeline: how wide
 its Spark stages run, how many Spark jobs ingest, one SimRank round and
 the statistics block take, and that its adjacency sideload dirs do not
-outlive the graphs they belong to. One unit test pins the identity
-precedence of `walk_simrank_round`, and one that the CLI rejects walk
-settings that cannot run before it starts Spark.
+outlive the graphs they belong to, or the interpreter when no graph
+owns them. The generator's 2k-vertex ingest graph pins how wide
+graphalg's PageRank and components loops run and PageRank's job count.
+One unit test pins the identity precedence of `walk_simrank_round`, and
+one that the CLI rejects walk settings that cannot run before it starts
+Spark.
 """
 
 from __future__ import annotations
 
 import gc
+import os
+import subprocess
+import sys
 from dataclasses import replace
+from pathlib import Path
 
 import pytest
 import yaml
@@ -23,7 +30,7 @@ from pyspark.sql import functions as F
 from big_data_graph_analysis_with_spark_spark import __main__ as cli
 from big_data_graph_analysis_with_spark_spark.config import SimConfig
 from big_data_graph_analysis_with_spark_spark.model import EDGE_SCHEMA, VERTEX_SCHEMA, NetGraph
-from big_data_graph_analysis_with_spark_spark.operators import matching, stats, walks
+from big_data_graph_analysis_with_spark_spark.operators import graphalg, matching, stats, walks
 from big_data_graph_analysis_with_spark_spark.operators.simrank import init_scores
 from big_data_graph_analysis_with_spark_spark.operators.walk_simrank import walk_simrank_round
 from big_data_graph_analysis_with_spark_spark.plans.pipeline import run_pipeline
@@ -36,6 +43,10 @@ BASE_SPEC = gen.GraphSpec(
 )
 # two SimRank rounds, so the prior-match fallback and the merge run too
 BASE_CFG = {"walks": 3, "iters": 4, "accum": 2, "coeff": 0.5, "threshold": 0.1, "seed": 5}
+REPO = Path(__file__).resolve().parent.parent
+#: jobs of `pagerank(iters=4).collect()` on the ingest graph: 26 measured,
+#: one job of slack
+PAGERANK_MAX_JOBS = 27
 
 
 def _pair(tmp_path, spec: gen.GraphSpec, seed: int) -> tuple[str, str]:
@@ -80,15 +91,25 @@ def test_cli_yaml_equals_oracle(spark, tmp_path, case):
 
 
 @pytest.mark.parametrize("args", [
-    ["--accum", "0"], ["--iters", "-1", "--accum", "-2"], ["--walks", "0"],
+    (["--accum", "0"], "must be >= 1"),
+    (["--iters", "-1", "--accum", "-2"], "must be >= 1"),
+    (["--walks", "0"], "must be >= 1"),
+    (["--coeff", "0"], "random_walk_coeff must be finite and > 0"),
+    (["--coeff", "-0.5"], "random_walk_coeff must be finite and > 0"),
+    (["--coeff", "nan"], "random_walk_coeff must be finite and > 0"),
+    (["--coeff", "inf"], "random_walk_coeff must be finite and > 0"),
+    (["--threshold", "nan"], "node_match_threshold must be finite"),
+    (["--threshold", "inf"], "node_match_threshold must be finite"),
 ])
 def test_cli_rejects_bad_walk_settings_before_spark(monkeypatch, args):
+    argv, match = args
+
     def no_spark(*_, **__):
         raise AssertionError("get_spark was called")
 
     monkeypatch.setattr(cli, "get_spark", no_spark)
-    with pytest.raises(ValueError, match="must be >= 1"):
-        cli.main(["--original", "og.txt", "--perturbed", "pg.txt", "--out", "out.yaml", *args])
+    with pytest.raises(ValueError, match=match):
+        cli.main(["--original", "og.txt", "--perturbed", "pg.txt", "--out", "out.yaml", *argv])
 
 
 def _sim_config(cfg: dict) -> SimConfig:
@@ -111,6 +132,22 @@ def _jobs_in_group(spark, group: str, fn):
     return out, sc.statusTracker().getJobIdsForGroup(group)
 
 
+def _wide_stages(spark, job_ids) -> dict:
+    """The stages of `job_ids` that ran at least the session's shuffle
+    width in tasks, as {stage id: (name, tasks)}."""
+    assert job_ids, "no job ran under the test's job group"
+    width = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    tracker = spark.sparkContext.statusTracker()
+    ran = {}
+    for jid in job_ids:
+        for sid in tracker.getJobInfo(jid).stageIds:
+            info = tracker.getStageInfo(sid)
+            if info is not None and info.numCompletedTasks:
+                ran[sid] = (info.name, info.numCompletedTasks)
+    assert ran, "no stage of the group ran a task"
+    return {sid: v for sid, v in ran.items() if v[1] >= width}
+
+
 def test_round_loop_stages_run_narrower_than_shuffle_width(spark, tmp_path):
     """On a 60-vertex pair every stage of the pipeline holds a few KB, so
     AQE should size every stage below the session's shuffle width. A
@@ -119,21 +156,37 @@ def test_round_loop_stages_run_narrower_than_shuffle_width(spark, tmp_path):
     exactly `spark.sql.shuffle.partitions` tasks."""
     og_path, pg_path = _pair(tmp_path, BASE_SPEC, BASE_CFG["seed"])
     og, pg = load_graph(spark, og_path), load_graph(spark, pg_path)
-    width = int(spark.conf.get("spark.sql.shuffle.partitions"))
     _, job_ids = _jobs_in_group(
         spark, "run_pipeline-stage-width",
         lambda: run_pipeline(spark, og, pg, _sim_config(BASE_CFG)),
     )
-    assert job_ids, "no job ran under the test's job group"
-    tracker = spark.sparkContext.statusTracker()
-    ran = {}
-    for jid in job_ids:
-        for sid in tracker.getJobInfo(jid).stageIds:
-            info = tracker.getStageInfo(sid)
-            if info is not None and info.numCompletedTasks:
-                ran[sid] = (info.name, info.numCompletedTasks)
-    wide = {sid: v for sid, v in ran.items() if v[1] >= width}
-    assert ran and not wide, f"stages at or above {width} tasks: {wide}"
+    wide = _wide_stages(spark, job_ids)
+    assert not wide, f"stages at or above the shuffle width: {wide}"
+
+
+def test_graphalg_loops_left_to_aqe(spark, tmp_path):
+    """PageRank and connected components on the 2k-vertex ingest graph
+    of `perfbench` (`graph_ingest_analytics`): AQE alone sizes every
+    loop iterate, so no stage runs at the shuffle width, and PageRank
+    counts its vertices once. `pagerank(iters=4).collect()` took 26 jobs
+    here in each of six runs; with a vertex-count pre-pass and a final
+    eager checkpoint it took 29, which the bound rejects."""
+    spec = gen.GraphSpec(
+        vertices=2000, out_degree=3.9, sink_fraction=0.0, perturbation=0.05,
+        valuable_fraction=0.5,
+    )
+    gen.generate(spec, 1, str(tmp_path), formats=("text",), graphs=("original",))
+    g = load_graph(spark, str(tmp_path / "original.txt"))
+    _, pr_jobs = _jobs_in_group(
+        spark, "graphalg-pagerank", lambda: graphalg.pagerank(g, iters=4).collect()
+    )
+    _, cc_jobs = _jobs_in_group(
+        spark, "graphalg-components", lambda: graphalg.connected_components(g).collect()
+    )
+    for name, jobs in (("pagerank", pr_jobs), ("connected_components", cc_jobs)):
+        wide = _wide_stages(spark, jobs)
+        assert not wide, f"{name}: stages at or above the shuffle width: {wide}"
+    assert len(pr_jobs) <= PAGERANK_MAX_JOBS, f"pagerank took {len(pr_jobs)} jobs"
 
 
 def test_sideload_dirs_die_with_their_graphs(spark, tmp_path, monkeypatch):
@@ -153,6 +206,36 @@ def test_sideload_dirs_die_with_their_graphs(spark, tmp_path, monkeypatch):
     del kept, og, pg
     gc.collect()
     assert list(scratch.glob("bdga_walk_adj_*")) == []
+
+
+_WALK_THEN_EXIT = """
+from big_data_graph_analysis_with_spark_spark import get_spark
+from big_data_graph_analysis_with_spark_spark.config import SimConfig
+from big_data_graph_analysis_with_spark_spark.model import NetGraph
+from big_data_graph_analysis_with_spark_spark.operators import walks
+
+spark = get_spark(app_name="sideload-exit")
+g = NetGraph(spark.range(4), spark.createDataFrame([(0, 1), (1, 2), (2, 3)], "src LONG, dst LONG"))
+cfg = SimConfig(num_of_parallel_walks=2, num_iters_per_comp_node=1, iters_before_accum=1)
+a = walks.sample_start_assignments(spark, [0], cfg)
+print("steps", walks.run_walks(spark, g, a, cfg).count())
+"""
+
+
+def test_uncached_sideload_dir_removed_at_exit(tmp_path):
+    """A sideload written without a `cache_key` (plain `run_walks`) has no
+    graph to die with, so it must go when the interpreter exits."""
+    env = {
+        **os.environ, "SPARK_GRAFT_SCRATCH": str(tmp_path),
+        "SPARK_GRAFT_DRIVER_MEM": "1g", "SPARK_GRAFT_CPUS": "1",
+    }
+    proc = subprocess.run(
+        [sys.executable, "-c", _WALK_THEN_EXIT], cwd=REPO, env=env,
+        capture_output=True, text=True, timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    assert "steps 4" in proc.stdout
+    assert list(tmp_path.glob("bdga_walk_adj_*")) == []
 
 
 def _graph(spark, ids, edges) -> NetGraph:

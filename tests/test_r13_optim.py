@@ -13,8 +13,6 @@ import json
 import os
 
 import bench
-from big_data_graph_analysis_with_spark_spark.model import NetGraph
-from big_data_graph_analysis_with_spark_spark.operators import graphalg
 
 
 def _sf() -> str:
@@ -67,47 +65,6 @@ def test_prior_timings_without_cpus_reports_none(tmp_path, monkeypatch):
     timings, cpus = bench._prior_timings()
     assert timings == {"c": 3.0}
     assert cpus is None
-
-
-def _tiny_graph(spark):
-    v = spark.createDataFrame([(1,), (2,), (3,)], "id LONG")
-    e = spark.createDataFrame([(1, 2), (2, 3)], "src LONG, dst LONG")
-    return NetGraph(v, e)
-
-
-def _is_checkpointed(df):
-    node = df._jdf.queryExecution().logical()
-    return (
-        node.getClass().getSimpleName() == "LogicalRDD"
-        and bool(node.rdd().isCheckpointed())
-    )
-
-
-def test_narrowed_materializes_lazy_checkpoint_chains(spark):
-    # r12 advice closure (graphalg commit 582d87c): _narrowed must not
-    # treat a _ckpt_lazy frame (LogicalRDD whose RDD is NOT yet
-    # checkpointed) as materialized — operators ending on a lazy chain
-    # must come back eagerly checkpointed, or a two-branch caller
-    # recomputes the whole iteration chain per branch.
-    g = _tiny_graph(spark)
-
-    @graphalg._narrowed
-    def _lazy_tail(graph):
-        return graphalg._ckpt_lazy(graph.vertices)
-
-    out = _lazy_tail(g)
-    assert _is_checkpointed(out), (
-        "_narrowed returned an unmaterialized lazy-checkpoint chain"
-    )
-
-    # an EAGERLY checkpointed result must pass through untouched
-    # (re-checkpointing would copy the materialized partitions again)
-    @graphalg._narrowed
-    def _eager_tail(graph):
-        return graphalg._ckpt(graph.vertices)
-
-    out = _eager_tail(g)
-    assert _is_checkpointed(out)
 
 
 def test_prior_timings_rejects_other_sf(tmp_path, monkeypatch):

@@ -89,9 +89,8 @@ def test_no_session_global_shuffle_width_mutation():
     """Verdict task 7: no operator may set spark.sql.shuffle.partitions
     on a live session — the set/restore narrowing contexts (graphalg
     r5-r10, plans/pipeline) silently narrowed every CONCURRENT query
-    that planned while they were open. graphalg now arms a thread-local
-    checkpoint width (`_ckpt`); the pipeline's narrowing was measured
-    not load-bearing under AQE and removed. The session factory builds
+    that planned while they were open. Loop widths are left to AQE,
+    which sizes each shuffle from its bytes. The session factory builds
     its conf dict before the session exists, and bench.py is the
     single-threaded harness — both exempt."""
     root = pathlib.Path(__file__).resolve().parent.parent
@@ -102,50 +101,9 @@ def test_no_session_global_shuffle_width_mutation():
         if re.search(r'conf\.set\( ?"spark\.sql\.shuffle\.partitions"', flat):
             offenders.append(str(path.relative_to(root)))
     assert not offenders, (
-        f"session-global shuffle-width mutation in: {offenders} — use a "
-        "thread-local checkpoint width (graphalg._ckpt) or explicit "
-        "repartition/coalesce on the loop frames"
+        f"session-global shuffle-width mutation in: {offenders} — let "
+        "AQE size the shuffle, or repartition/coalesce the frame itself"
     )
-
-
-class TestScopedNarrowing:
-    def test_narrow_width_is_thread_local(self, spark):
-        """A concurrent thread must see NO narrowing while an operator's
-        _narrow_shuffle context is open (the round-5..10 footgun)."""
-        from big_data_graph_analysis_with_spark_spark.operators import graphalg
-        from big_data_graph_analysis_with_spark_spark.sources import tpch_graph
-
-        og, _pg = tpch_graph.derive_graphs(spark, SF0001)
-        conf_before = spark.conf.get("spark.sql.shuffle.partitions")
-        with graphalg._narrow_shuffle(og):
-            assert graphalg._NARROW_LOCAL.width == graphalg._NARROW_WIDTH
-            import threading
-
-            seen = {}
-
-            def peek():
-                seen["width"] = getattr(graphalg._NARROW_LOCAL, "width", None)
-
-            t = threading.Thread(target=peek)
-            t.start()
-            t.join()
-            assert seen["width"] is None
-            # session conf untouched even on the arming thread
-            assert (
-                spark.conf.get("spark.sql.shuffle.partitions") == conf_before
-            )
-        assert getattr(graphalg._NARROW_LOCAL, "width", None) is None
-
-    def test_ckpt_coalesces_only_inside_context(self, spark):
-        from big_data_graph_analysis_with_spark_spark.operators import graphalg
-        from big_data_graph_analysis_with_spark_spark.sources import tpch_graph
-
-        og, _pg = tpch_graph.derive_graphs(spark, SF0001)
-        wide = spark.range(1000).repartition(32)
-        assert graphalg._ckpt(wide).rdd.getNumPartitions() == 32
-        with graphalg._narrow_shuffle(og):
-            got = graphalg._ckpt(wide).rdd.getNumPartitions()
-            assert got <= graphalg._NARROW_WIDTH
 
 
 class TestSpreadRuleInPlans:
@@ -183,9 +141,9 @@ class TestSpreadRuleInPlans:
 def _disk_only_rdd_ids(spark) -> set[int]:
     """Ids of currently-persisted DISK_ONLY RDDs (the kcore iterate
     level). localCheckpoint blocks (MEMORY_AND_DISK, owned by the
-    `_narrowed` materialization and freed by the ContextCleaner) are
-    deliberately excluded — the leak contract is about the explicit
-    persists."""
+    operators' `_ckpt` materializations and freed by the
+    ContextCleaner) are deliberately excluded — the leak contract is
+    about the explicit persists."""
     jmap = spark.sparkContext._jsc.getPersistentRDDs()
     out = set()
     for key in jmap.keySet():

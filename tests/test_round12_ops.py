@@ -1,15 +1,11 @@
-"""Round-12 regression tests: the three r11 ADVICE items, each pinned
-with the failure mode it closes.
+"""Round-12 regression tests: two r11 ADVICE items, each pinned with
+the failure mode it closes.
 
-1. `graphalg._narrow_shuffle` must DISARM the thread-local checkpoint
-   width when the graph is at/above the threshold, so a nested call on
-   a large graph inside an outer small-graph context does not inherit
-   width=8 and coalesce edge-sized iterates of the big graph.
-2. `dedup.winnow_overlap_pairs` materializes the fingerprint frame
+1. `dedup.winnow_overlap_pairs` materializes the fingerprint frame
    once (localCheckpoint) before the df-cap aggregate and the pair
    self-join — previously the char-gram explode + per-doc window
    subtree re-ran up to three times per query.
-3. `sketches.bloom_filter_audit` anchors the synthetic outsider probes
+2. `sketches.bloom_filter_audit` anchors the synthetic outsider probes
    at COALESCE(MAX(user_id), 0): on an empty events frame the k
    outsider ids previously all became NULL and collapsed into a single
    group row.
@@ -17,53 +13,7 @@ with the failure mode it closes.
 
 from __future__ import annotations
 
-import pyspark.sql.functions as F
-
-from big_data_graph_analysis_with_spark_spark.model import NetGraph
-from big_data_graph_analysis_with_spark_spark.operators import (
-    dedup,
-    graphalg,
-    sketches,
-)
-
-
-def _tiny_graph(spark, n):
-    verts = spark.range(n).select(F.col("id"))
-    edges = spark.range(n - 1).select(
-        F.col("id").alias("src"), (F.col("id") + 1).alias("dst")
-    )
-    return NetGraph(vertices=verts, edges=edges)
-
-
-class TestNarrowShuffleNesting:
-    def test_large_graph_disarms_inherited_width(self, spark):
-        g_small = _tiny_graph(spark, 4)
-        g_big = _tiny_graph(spark, 4)
-        big_n = graphalg._NARROW_THRESHOLD  # at-threshold ⇒ must disarm
-        with graphalg._narrow_shuffle(g_small):
-            assert graphalg._NARROW_LOCAL.width == graphalg._NARROW_WIDTH
-            with graphalg._narrow_shuffle(g_big, n_vertices=big_n):
-                # the nested large-graph context must NOT inherit the
-                # outer narrow width (r11 advice: edge-sized iterates of
-                # the big graph would coalesce to 8 partitions)
-                assert graphalg._NARROW_LOCAL.width is None
-            # outer context restored on exit of the nested one
-            assert graphalg._NARROW_LOCAL.width == graphalg._NARROW_WIDTH
-        assert graphalg._NARROW_LOCAL.width is None
-
-    def test_ckpt_full_width_under_disarmed_nested_context(self, spark):
-        g_small = _tiny_graph(spark, 4)
-        df = spark.range(100).repartition(16)
-        with graphalg._narrow_shuffle(g_small):
-            with graphalg._narrow_shuffle(
-                g_small, n_vertices=graphalg._NARROW_THRESHOLD
-            ):
-                kept = graphalg._ckpt(df)
-                assert kept.rdd.getNumPartitions() == 16
-            narrowed = graphalg._ckpt(df)
-            assert (
-                narrowed.rdd.getNumPartitions() == graphalg._NARROW_WIDTH
-            )
+from big_data_graph_analysis_with_spark_spark.operators import dedup, sketches
 
 
 class TestWinnowMaterialization:

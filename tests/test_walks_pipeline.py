@@ -124,12 +124,13 @@ def test_run_walks_has_no_driver_collect():
     assert "_load_adjacency" in src
 
 
-def test_frontier_tier_forced_dispatch_properties(spark, graph20):
-    """run_walks(frontier_threshold=0) must route to the frontier-join
-    tier and deliver the kernel's contract: valid paths, quota bound,
+def test_frontier_tier_forced_dispatch_properties(spark, graph20, monkeypatch):
+    """With FRONTIER_TIER_THRESHOLD patched to 0, run_walks must route to
+    the frontier-join tier and deliver the kernel's contract: valid paths, quota bound,
     step-0 starts, every (partition, walk) present, determinism."""
     start_ids = [r["id"] for r in topology.start_nodes(graph20).select("id").collect()]
     a = walks.sample_start_assignments(spark, start_ids, CFG)
+    monkeypatch.setattr(walks, "FRONTIER_TIER_THRESHOLD", 0)
     # the two determinism runs are independent iterative kernels —
     # overlap them on two driver threads
     from concurrent.futures import ThreadPoolExecutor
@@ -137,7 +138,7 @@ def test_frontier_tier_forced_dispatch_properties(spark, graph20):
     from pyspark import inheritable_thread_target
 
     def one_run():
-        return walks.run_walks(spark, graph20, a, CFG, frontier_threshold=0)
+        return walks.run_walks(spark, graph20, a, CFG)
 
     def cached_run():
         df = one_run().cache()
@@ -296,11 +297,12 @@ def test_node2vec_return_bias(spark):
     assert len(path1) == 13
 
 
-def test_node2vec_frontier_valid_deterministic_and_biased(spark):
+def test_node2vec_frontier_valid_deterministic_and_biased(spark, monkeypatch):
     """The frontier tier must deliver the kernel's contract — valid
     directed paths, step-0 starts, sink termination, determinism under
-    repartitioning — and honor the second-order q bias; dispatch via
-    node2vec_walks(frontier_threshold=0) must route to it."""
+    repartitioning — and honor the second-order q bias; with
+    FRONTIER_TIER_THRESHOLD patched to 0, node2vec_walks must route to
+    it."""
     from big_data_graph_analysis_with_spark_spark.model import NetGraph
     from big_data_graph_analysis_with_spark_spark.operators import walks
 
@@ -308,10 +310,8 @@ def test_node2vec_frontier_valid_deterministic_and_biased(spark):
     edges = [(1, 2), (2, 3), (3, 4), (4, 1), (2, 5), (5, 6), (6, 7)]
     e = spark.createDataFrame(edges, "src LONG, dst LONG")
     g = NetGraph(v, e)
-    out = walks.node2vec_walks(
-        spark, g, walks_per_vertex=2, walk_length=10, seed=3,
-        frontier_threshold=0,
-    )
+    monkeypatch.setattr(walks, "FRONTIER_TIER_THRESHOLD", 0)
+    out = walks.node2vec_walks(spark, g, walks_per_vertex=2, walk_length=10, seed=3)
     rows = sorted(
         (r["start_id"], r["rep"], r["step"], r["node_id"]) for r in out.collect()
     )
