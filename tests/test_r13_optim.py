@@ -11,6 +11,9 @@ regression signal.
 
 import json
 import os
+import subprocess
+import sys
+from pathlib import Path
 
 import bench
 
@@ -102,3 +105,16 @@ def test_rerun_plan_changed_modules_get_tighter_trigger():
 
 def test_rerun_plan_skips_suites_without_prior():
     assert bench._rerun_plan({"new": 9.9}, {}, changed={"new"}) == []
+
+
+def test_import_leaves_driver_mem_unset():
+    # importing the harness must not hand its 24 GB heap to the
+    # importer's next get_spark (the test JVM launches after collection)
+    env = {k: v for k, v in os.environ.items() if k != "SPARK_GRAFT_DRIVER_MEM"}
+    env["PYTHONPATH"] = str(Path(__file__).resolve().parents[1])
+    out = subprocess.run(
+        [sys.executable, "-c",
+         "import os, bench; print(os.environ.get('SPARK_GRAFT_DRIVER_MEM'))"],
+        env=env, capture_output=True, text=True, check=True, timeout=300,
+    )
+    assert out.stdout.strip() == "None"
