@@ -62,6 +62,7 @@ import weakref
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -115,6 +116,17 @@ def _load_adjacency(path: str) -> dict[int, list[int]]:
     return adj
 
 
+def _long_frame(spark: SparkSession, **columns: list) -> DataFrame:
+    """A small driver-side frame of int64 columns, as a LocalRelation.
+
+    An Arrow table reaches the JVM in one batch. A Python list would
+    become a pickled RDD, and every read of it starts Python worker
+    tasks only to unpickle a few rows."""
+    return spark.createDataFrame(
+        pa.table({k: pa.array(v, pa.int64()) for k, v in columns.items()})
+    )
+
+
 def sample_start_assignments(
     spark: SparkSession,
     start_ids: list[int],
@@ -122,17 +134,16 @@ def sample_start_assignments(
 ) -> DataFrame:
     """(partition_key, start_id) — one seeded uniform-with-replacement
     draw per parallel walk slot (G2, `createRDDForRW`)."""
-    if not start_ids:
-        # reference crashes on cyclic graphs (Random.nextInt(0),
-        # SURVEY.md §7.4.8); degrade to an empty assignment instead
-        return spark.createDataFrame([], "partition_key LONG, start_id LONG")
+    # reference crashes on cyclic graphs (Random.nextInt(0),
+    # SURVEY.md §7.4.8); no start ids degrade to an empty assignment
+    keys = range(1, cfg.num_of_parallel_walks + 1) if start_ids else range(0)
     rng = np.random.default_rng([cfg.seed, 0])
     pool = sorted(start_ids)
-    rows = [
-        (int(k), int(pool[rng.integers(0, len(pool))]))
-        for k in range(1, cfg.num_of_parallel_walks + 1)
-    ]
-    return spark.createDataFrame(rows, "partition_key LONG, start_id LONG")
+    return _long_frame(
+        spark,
+        partition_key=list(keys),
+        start_id=[pool[rng.integers(0, len(pool))] for _ in keys],
+    )
 
 
 def sample_start_assignments_dist(
@@ -165,16 +176,15 @@ def sample_start_assignments_dist(
         .localCheckpoint(eager=False)
     )
     n = ranked.count()
-    if n == 0:
-        return spark.createDataFrame([], "partition_key LONG, start_id LONG")
+    keys = range(1, cfg.num_of_parallel_walks + 1) if n else range(0)
     rng = np.random.default_rng([cfg.seed, 0])
-    draws = [
-        (int(k), int(rng.integers(0, n)))
-        for k in range(1, cfg.num_of_parallel_walks + 1)
-    ]
-    draws_df = spark.createDataFrame(draws, "partition_key LONG, rank LONG")
+    draws = _long_frame(
+        spark,
+        partition_key=list(keys),
+        rank=[rng.integers(0, n) for _ in keys],
+    )
     return (
-        ranked.join(F.broadcast(draws_df), on="rank")
+        ranked.join(F.broadcast(draws), on="rank")
         .select("partition_key", F.col("id").alias("start_id"))
     )
 

@@ -65,6 +65,18 @@ _DEFAULTS = {
     # suite in a fresh JVM).
     "spark.ui.enabled": "false",
     "spark.ui.showConsoleProgress": "true",
+    # One MitM execution generates 162-173 whole-stage / expression
+    # classes; Spark's generated-class cache is an LRU of 100 by
+    # default, so every warm execution recompiled about 153 of them
+    # (CodegenMetrics compile count). 2000 keeps a whole execution's
+    # classes and those of a few other queries loaded.
+    "spark.sql.codegen.cache.maxEntries": "2000",
+    # PySpark 4.1 captures the Python call site of every Column call
+    # (`inspect` on the stack plus 4-6 Py4J round trips each): about
+    # 8,900 Py4J round trips per MitM execution with it, 4,100 without.
+    # What is lost: DataFrame error contexts no longer name the Python
+    # line that built the failing expression.
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
 }
 
 

@@ -28,6 +28,7 @@ from __future__ import annotations
 from functools import reduce
 from operator import or_
 
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -147,8 +148,12 @@ def _parse(raw: DataFrame, source: str) -> NetGraph:
 
 
 def parse_graph_text(spark: SparkSession, text: str) -> NetGraph:
-    """Parse an in-memory graph dump string (test/fixture path)."""
-    return _parse(spark.createDataFrame([(text,)], "value STRING"), "graph text")
+    """Parse an in-memory graph dump string (test/fixture path).
+
+    The one-row frame comes from an Arrow table, a LocalRelation; a
+    Python list would be a pickled RDD whose read starts Python worker
+    tasks just to unpickle the string."""
+    return _parse(spark.createDataFrame(pa.table({"value": [text]})), "graph text")
 
 
 def load_graph(spark: SparkSession, path: str) -> NetGraph:

@@ -47,6 +47,9 @@ REPO = Path(__file__).resolve().parent.parent
 #: jobs of `pagerank(iters=4).collect()` on the ingest graph: 26 measured,
 #: one job of slack
 PAGERANK_MAX_JOBS = 27
+#: Janino compiles of the second of two back-to-back CLI runs on the
+#: base pair: 0 measured, 10 of slack (150 with Spark's default cache)
+WARM_MAX_COMPILES = 10
 
 
 def _pair(tmp_path, spec: gen.GraphSpec, seed: int) -> tuple[str, str]:
@@ -77,17 +80,34 @@ def test_cli_yaml_equals_oracle(spark, tmp_path, case):
         assert cfg["walks"] > _start_nodes(spec, cfg["seed"])
     og_path, pg_path = _pair(tmp_path, spec, cfg["seed"])
     out = tmp_path / "stats.yaml"
-    rc = cli.main([
+    assert cli.main(_cli_args(og_path, pg_path, out, cfg)) == 0
+    got = yaml.safe_load(out.read_text())
+    want = oracle.mitm_stats(*gen.build_pair(spec, cfg["seed"]), cfg)
+    assert got == want
+
+
+def _cli_args(og_path: str, pg_path: str, out: Path, cfg: dict) -> list[str]:
+    return [
         "--original", og_path, "--perturbed", pg_path, "--out", str(out),
         "--format", "text",
         "--walks", str(cfg["walks"]), "--iters", str(cfg["iters"]),
         "--accum", str(cfg["accum"]), "--coeff", str(cfg["coeff"]),
         "--threshold", str(cfg["threshold"]), "--seed", str(cfg["seed"]),
-    ])
-    assert rc == 0
-    got = yaml.safe_load(out.read_text())
-    want = oracle.mitm_stats(*gen.build_pair(spec, cfg["seed"]), cfg)
-    assert got == want
+    ]
+
+
+def test_warm_run_recompiles_no_generated_class(spark, tmp_path):
+    """A second run of the same execution finds every generated class in
+    Spark's codegen cache. One execution generates about 160 classes;
+    with the cache at Spark's default 100 entries the second run
+    recompiled about 150 of them."""
+    og_path, pg_path = _pair(tmp_path, BASE_SPEC, BASE_CFG["seed"])
+    args = _cli_args(og_path, pg_path, tmp_path / "stats.yaml", BASE_CFG)
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    assert cli.main(args) == 0
+    before = compiles.getCount()
+    assert cli.main(args) == 0
+    assert compiles.getCount() - before <= WARM_MAX_COMPILES
 
 
 @pytest.mark.parametrize("args", [

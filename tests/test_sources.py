@@ -42,6 +42,8 @@ def test_parse_fields_roundtrip(spark):
         "NodeObject(7,0,0,1,0,0,0,0,0.5,false),7,111,Some(86),0.029098701))"
     )
     g = parse_graph_text(spark, text)
+    # the text reaches Spark as a LocalRelation, not a pickled Python RDD
+    assert "LogicalRDD" not in g.vertices._jdf.queryExecution().analyzed().toString()
     nodes = {r["id"]: r.asDict() for r in g.vertices.collect()}
     assert nodes[0]["stored_value"] == pytest.approx(-9.144269410237845e-4)
     assert nodes[0]["valuable_data"] is True

@@ -113,6 +113,24 @@ def test_dist_start_sampling_matches_driver_sampling(spark, graph20):
     assert via_dist == via_driver and len(via_dist) == CFG.num_of_parallel_walks
 
 
+def test_start_draws_are_a_local_relation(spark):
+    """The seeded draws reach Spark as a LocalRelation, in both twins. A
+    Python list would be a pickled RDD (a LogicalRDD), and every read of
+    it starts Python worker tasks. The only RDD left in the distributed
+    twin's plan is the checkpoint of the ranked start nodes."""
+    sn = spark.createDataFrame([(3,), (1,), (7,)], "id LONG")
+    dist = walks.sample_start_assignments_dist(spark, sn, CFG)
+    leaves = [
+        line.split("- ")[-1]
+        for line in dist._jdf.queryExecution().analyzed().toString().splitlines()
+        if "LocalRelation" in line or "LogicalRDD" in line
+    ]
+    assert len(leaves) == 2 and leaves[0].startswith("LogicalRDD [id#")
+    assert leaves[1].startswith("LocalRelation [partition_key#")
+    driver = walks.sample_start_assignments(spark, [3, 1, 7], CFG)
+    assert driver._jdf.queryExecution().analyzed().toString().startswith("LocalRelation")
+
+
 def test_run_walks_has_no_driver_collect():
     """The round-3 scale-killer (O(|V|) adjacency collect in run_walks)
     must not regress: the kernel reads its adjacency from the parquet
