@@ -5,8 +5,9 @@ The reference is a Scala/spark-core MitM-attack statistics simulator
 (random walks over a perturbed graph + one-pass SimRank node matching).
 This engine re-expresses every operator Spark-first: DataFrame/SQL plans
 optimized by Catalyst, a seeded `applyInPandas` walk kernel for the one
-genuinely sequential piece, and a driver round-loop replacing the
-reference's custom accumulator (see SURVEY.md §2 for the inventory).
+genuinely sequential piece, and one Python matcher task that runs every
+round's SimRank, best match and max-merge in place of the reference's
+custom accumulator (see SURVEY.md §2 for the inventory).
 
 Beyond the reference surface it adds large-scale training-data pipeline
 operators: deduplication (exact / MinHash-LSH / SimHash / n-gram Jaccard /

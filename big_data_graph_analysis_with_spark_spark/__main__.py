@@ -19,7 +19,7 @@ import sys
 
 from .config import SimConfig
 from .plans.pipeline import run_pipeline
-from .session import get_spark
+from .session import get_spark, quiet_window_warns
 from .sources.ngs_text import load_graph
 from .sources.parquet_graph import read_graph_parquet
 
@@ -76,6 +76,9 @@ def main(argv: list[str] | None = None) -> int:
         seed=args.seed,
     )
     spark = get_spark(app_name="MitMStatSim", master=args.master)
+    # the start-node rank window is unpartitioned by design
+    # (walks.sample_start_assignments_dist)
+    quiet_window_warns(spark)
     og = _load(spark, args.original, args.format)
     pg = _load(spark, args.perturbed, args.format)
     result = run_pipeline(spark, og, pg, cfg, yaml_path=args.out)

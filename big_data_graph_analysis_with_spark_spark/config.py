@@ -50,12 +50,5 @@ class SimConfig:
                 f"node_match_threshold must be finite, got {self.node_match_threshold}"
             )
 
-    @property
-    def num_rounds(self) -> int:
-        """Driver-loop rounds replacing the reference's itersBeforeAccum
-        batching inside mapPartitions (Main.scala:83-90)."""
-        q, r = divmod(self.num_iters_per_comp_node, self.iters_before_accum)
-        return q + (1 if r else 0)
-
 
 DEFAULT_CONFIG = SimConfig()

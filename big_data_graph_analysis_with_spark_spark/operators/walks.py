@@ -23,21 +23,21 @@ Documented deviations (SURVEY.md §7.4):
 Execution model: walks are inherently sequential (step t+1 depends on
 t), so the kernel is an `applyInPandas` grouped map — one group per
 partition key, Arrow-batched both ways. The adjacency reaches the
-kernel **executor-side**: ``child_map`` (one compact row per vertex,
-children pre-sorted for seeded-rng determinism) is written once as a
-parquet sideload, and each Python worker builds its pre-indexed dict
-from that columnar file on first use (cached per worker process). The
-driver never materializes a single vertex — unlike the reference,
-which collects and broadcasts the whole graph through the driver
-(`Main.scala:72-73`) and then does a **linear scan of the edge list
-per step** (`:316-318`). On a cluster the sideload path lives on the
-shared FS (HDFS/S3) and executors fetch it exactly like any input
-split. A walk can reach anywhere, so this kernel needs the whole
-graph's adjacency in memory *per executor*, and the ceiling is
-executor RAM — ≤ a few GB of adjacency per walk job. The per-walk
-SimRank kernel (walk_simrank) has the same ceiling, twice over: it
-reads the sideloads of both graphs of a pair on each worker.
-Matching and stats are DataFrame algebra and scale independently.
+kernel **executor-side**: the graph is written once as a parquet
+sideload (:func:`ensure_sideload`: one row per vertex, its own columns
+plus its sorted children), and each Python worker builds its
+pre-indexed dict from that columnar file on first use (cached per
+worker process). The driver never materializes a single vertex —
+unlike the reference, which collects and broadcasts the whole graph
+through the driver (`Main.scala:72-73`) and then does a **linear scan
+of the edge list per step** (`:316-318`). On a cluster the sideload
+path lives on the shared FS (HDFS/S3) and executors fetch it exactly
+like any input split. A walk can reach anywhere, so this kernel needs
+the whole graph's adjacency in memory *per executor*, and the ceiling
+is executor RAM — ≤ a few GB of adjacency per walk job. The MitM
+matcher (walk_simrank) reads the sideloads of both graphs of a pair,
+vertex rows included, in its one task. Stats are DataFrame algebra and
+scale independently.
 
 Above that per-executor memory ceiling a second tier takes over
 (:func:`run_walks_frontier`, dispatched by vertex count in
@@ -72,6 +72,10 @@ from . import topology
 
 WALK_SCHEMA = "partition_key LONG, walk_id LONG, step LONG, node_id LONG"
 
+#: the sideload's child-list column; the vertex frame's own `children`
+#: column is the NodeObject's attribute, not the adjacency
+CHILD_IDS = "child_ids"
+
 #: above this vertex count run_walks dispatches to the frontier-join
 #: tier — the per-worker adjacency index (dict of |V| lists, roughly
 #: 100 bytes/vertex + 16 bytes/edge) no longer fits a normally-sized
@@ -101,14 +105,11 @@ def _load_adjacency(path: str) -> dict[int, list[int]]:
     if adj is None:
         import pyarrow.dataset as ds
 
-        tbl = ds.dataset(path, format="parquet").to_table(
-            columns=["id", "children"]
-        )
+        tbl = ds.dataset(path, format="parquet").to_table(columns=["id", CHILD_IDS])
         adj = {
-            int(i): [int(c) for c in ch]
-            for i, ch in zip(
-                tbl.column("id").to_pylist(), tbl.column("children").to_pylist()
-            )
+            i: ch
+            for i, ch in zip(tbl.column("id").to_pylist(), tbl.column(CHILD_IDS).to_pylist())
+            if ch
         }
         while len(_ADJ_CACHE) >= _ADJ_CACHE_MAX:
             _ADJ_CACHE.pop(next(iter(_ADJ_CACHE)))
@@ -194,20 +195,18 @@ def ensure_sideload(
     num_vertices: int | None = None,
     cache_key: NetGraph | None = None,
 ) -> str:
-    """Materialize (or reuse) the executor-side adjacency sideload for
-    a graph `pg` and return its path. The walk kernels read it for the
-    graph they walk; the per-walk SimRank kernel reads one for each
-    side of a pair (walk_simrank.walk_simrank_round).
+    """Materialize (or reuse) the executor-side sideload of a graph `pg`
+    and return its path. The walk kernels read its child lists for the
+    graph they walk; the MitM matcher (walk_simrank.match_walks) reads
+    the sideloads of both graphs of a pair, vertex rows included.
 
-    Adjacency is aggregated cluster-side (topology.child_map: one
-    groupBy, children pre-sorted for seeded-rng determinism) and
-    written as a parquet sideload that each executor's Python worker
-    reads and indexes itself — NO driver materialization of any part
-    of the graph (the round-3 version collected one compact row per
-    vertex to the driver before broadcasting; at a 100 TB graph even
-    that O(|V|) driver pass is the bottleneck). Locally the sideload
-    is a temp dir; on a cluster, point SPARK_GRAFT_SCRATCH at the
-    shared FS.
+    One row per vertex: the vertex frame's own columns plus
+    ``child_ids``, its sorted children (empty for sinks; an edge source
+    missing from the vertex frame gets null vertex columns), built
+    cluster-side — NO driver materialization. A worker's dict costs
+    about 100 B per vertex plus 16 B per child; the matcher's row
+    tuples a few hundred bytes more per vertex. Locally the sideload is
+    a temp dir; on a cluster, point SPARK_GRAFT_SCRATCH at a shared FS.
 
     Reuse is keyed on `cache_key` (default: `pg` itself) in a weak-key
     registry — callers that re-wrap the graph per run (e.g.
@@ -219,7 +218,7 @@ def ensure_sideload(
     key is garbage-collected (or at interpreter exit), so a long-lived
     driver does not accumulate them. Such a caller must materialize
     whatever reads the sideload while it holds the key (run_pipeline
-    checkpoints its walk steps and each round's matches). Without a
+    checkpoints its walk steps and its matches). Without a
     `cache_key` the dir outlives the graph, since run_walks /
     node2vec_walks return lazy frames that may read it after their
     graph argument is gone; it is deleted at interpreter exit.
@@ -236,9 +235,11 @@ def ensure_sideload(
     )
     adj_path = os.path.join(scratch, "child_map")
     n_files = max(1, math.ceil(n_v / 2_000_000))
-    topology.child_map(pg).coalesce(n_files).write.mode("overwrite").parquet(
-        adj_path
+    kids = topology.child_map(pg).withColumnRenamed("children", CHILD_IDS)
+    rows = pg.vertices.join(kids, on="id", how="full").withColumn(
+        CHILD_IDS, F.coalesce(CHILD_IDS, F.array().cast("array<long>"))
     )
+    rows.coalesce(n_files).write.mode("overwrite").parquet(adj_path)
     _SIDELOAD_PATHS[key] = adj_path
     if cache_key is not None:
         weakref.finalize(cache_key, shutil.rmtree, scratch, True)
@@ -258,7 +259,7 @@ def run_walks(
     """All walks for all partitions: (partition_key, walk_id, step, node_id).
 
     walk_id is globally ordered per partition (0-based across all
-    rounds); the driver loop slices rounds by
+    rounds); the matcher (walk_simrank) groups rounds by
     ``walk_id // iters_before_accum``.
 
     Dispatch: up to FRONTIER_TIER_THRESHOLD vertices the sideload

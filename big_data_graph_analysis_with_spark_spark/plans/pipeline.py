@@ -6,28 +6,22 @@ Reference lifecycle (`Main.scala:52-214`): load both graphs → broadcast
 `itersBeforeAccum` walks + per-walk SimRank + best-match + valuable
 filter → custom accumulator max-merge → driver statistics → YAML.
 
-Restatement: a **driver round-loop** replaces the in-partition batching
-and the accumulator (G9). Per round r:
+Restatement: no round loop on the driver. Walks of every round are
+generated up front in one seeded `applyInPandas` pass (they never
+depend on match state, only on partition-local visited history) and
+their visited sets checkpointed once. One Python task
+(`walk_simrank.match_walks`) then runs every round's per-walk SimRank,
+G7 best match, G8 valuable filter and the max-merge that replaces the
+accumulator (G9); its output, the final matches, is checkpointed once
+and feeds the statistics block.
 
-1. walks with ``walk_id ∈ [r·B, (r+1)·B)`` (all generated up front in
-   one seeded `applyInPandas` pass — walk generation never depends on
-   match state, only on partition-local visited history);
-2. per-walk SimRank against the whole original graph: one grouped-map
-   kernel over all walks of the round (`walk_simrank.walk_simrank_round`),
-   with the global `matches` table as accumulator fallback. Its sums are
-   integer cents, exact because every input score is 1.0 or a prior
-   ``round(·, 2)``; the og-side G6 prune is a post-filter, exact because
-   an output pair sums only contributions to its own og node and ``dn``
-   counts the unpruned in-edges;
-3. merged candidates → G7 best-match → G8 valuable filter →
-   global max-merge into `matches`.
+Neither graph reaches the driver: each is written once as a parquet
+sideload (`walks.ensure_sideload`, keyed on the caller's graph objects,
+which own the dirs), read by the walk kernel (pg) and the matcher (pg
+and og). The matcher task holds both graphs and every walk's visited
+set, so one Python worker's memory bounds the pipeline's scale.
 
-Neither graph reaches the driver: both child maps are written once as
-parquet sideloads (`walks.ensure_sideload`, keyed on the caller's graph
-objects, which own the dirs), read by the walk kernel (pg) and the
-SimRank kernel (pg and og) on the workers.
-
-The DataFrame `matches` table gives the accumulator's *intended*
+The in-task `matches` dict gives the accumulator's *intended*
 semantics (global max-merge, README.md:142) deterministically — the
 reference's version is per-partition-visible with a last-write-wins
 merge (`Main.scala:42`), and re-scores every previous batch's walks
@@ -36,27 +30,23 @@ each round (`Main.scala:104-108` loops over all accumulated subgraphs)
 score each walk once (SURVEY.md §7.4.4 also notes the reference drops
 single-map batches entirely; we accumulate from ≥1).
 
-Scale notes: `matches` is localCheckpointed each round — iterative
-lineage otherwise grows unboundedly and re-executes every prior round
-at each action. The round-invariant inputs (walk steps, the per-walk
-visited sets, the identity seed) are localCheckpointed once, not
-cached: AQE sizes a checkpointed frame from its bytes, but it may not
-coalesce a cached plan's output
+Scale notes: the walk steps and visited sets are localCheckpointed,
+not cached: AQE sizes a checkpointed frame from its bytes, but it may
+not coalesce a cached plan's output
 (`spark.sql.optimizer.canChangeCachedPlanOutputPartitioning` is false
-in Spark 4.1), so a cached frame keeps the full shuffle width and
-every round's scan of it schedules one task per partition.
+in Spark 4.1), so a cached frame keeps the full shuffle width and every
+scan of it schedules one task per partition.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ..config import DEFAULT_CONFIG, SimConfig
 from ..model import NetGraph
-from ..operators import matching, stats, topology, walk_simrank, walks
+from ..operators import stats, topology, walk_simrank, walks
 from ..sources.sinks import write_yaml_stats
 
 
@@ -65,7 +55,6 @@ class PipelineResult:
     stats: dict[str, str]
     matches: DataFrame
     walk_steps: DataFrame
-    per_round_match_counts: list[int] = field(default_factory=list)
 
 
 def run_pipeline(
@@ -74,7 +63,6 @@ def run_pipeline(
     pg: NetGraph,
     cfg: SimConfig = DEFAULT_CONFIG,
     yaml_path: str | None = None,
-    collect_round_counts: bool = False,
 ) -> PipelineResult:
     # the caller's graph objects are the STABLE cache identity for the
     # adjacency sideloads; the persist() wrappers below are fresh
@@ -98,46 +86,11 @@ def run_pipeline(
         walk_steps = walk_steps.localCheckpoint()  # run the kernel exactly once
 
         visited = walks.walk_visited_sets(walk_steps).localCheckpoint()
-
-        # the identity seed (10-attribute fingerprint join) is
-        # round-invariant: materialized ONCE, not per round
-        from ..operators.simrank import init_scores
-
-        identity = init_scores(pg, og).localCheckpoint()
-
-        matches: DataFrame | None = None
-        per_round_counts: list[int] = []
-        for rnd in range(cfg.num_rounds):
-            lo = rnd * cfg.iters_before_accum
-            hi = min((rnd + 1) * cfg.iters_before_accum, cfg.num_iters_per_comp_node)
-            # one global walk key per (partition, walk) pair for the round
-            round_nodes = (
-                visited.filter((F.col("walk_id") >= lo) & (F.col("walk_id") < hi))
-                .select(
-                    (F.col("partition_key") * cfg.num_iters_per_comp_node + F.col("walk_id")).alias("walk_id"),
-                    F.explode("visited").alias("id"),
-                )
-            )
-            scores = walk_simrank.walk_simrank_round(
-                round_nodes, matches, identity, pg_adj, og_adj
-            )
-            candidates = scores.select("pg_id", "og_id", "score")
-            best = matching.best_match(candidates, pg, og)
-            valuable = matching.valuable_matches(best, og)  # G8 before accumulate
-            matches = matching.merge_matches(matches, valuable).localCheckpoint()
-            if collect_round_counts:
-                per_round_counts.append(matches.count())
-
-        assert matches is not None
+        matches = walk_simrank.match_walks(visited, pg_adj, og_adj, cfg).localCheckpoint()
         stat_block = stats.assemble_stats(og, matches, visited, cfg.node_match_threshold)
         if yaml_path:
             write_yaml_stats(spark, stat_block, yaml_path)
     finally:
         og.unpersist()
         pg.unpersist()
-    return PipelineResult(
-        stats=stat_block,
-        matches=matches,
-        walk_steps=walk_steps,
-        per_round_match_counts=per_round_counts,
-    )
+    return PipelineResult(stats=stat_block, matches=matches, walk_steps=walk_steps)

@@ -4,14 +4,13 @@ The pairs come from `perfbench/gen.py` and the expected statistics from
 `perfbench/oracle.py`, a pure-Python re-derivation that shares no code
 with the engine. The YAML the CLI writes must equal the oracle exactly.
 The same pairs also pin resource properties of the pipeline: how wide
-its Spark stages run, how many Spark jobs ingest, one SimRank round and
+its Spark stages run, how many Spark jobs ingest, the match stage and
 the statistics block take, and that its adjacency sideload dirs do not
 outlive the graphs they belong to, or the interpreter when no graph
 owns them. The generator's 2k-vertex ingest graph pins how wide
 graphalg's PageRank and components loops run and PageRank's job count.
-One unit test pins the identity precedence of `walk_simrank_round`, and
-one that the CLI rejects walk settings that cannot run before it starts
-Spark.
+One test pins that the CLI rejects walk settings that cannot run before
+it starts Spark, and one that it silences WindowExec's warnings.
 """
 
 from __future__ import annotations
@@ -25,14 +24,10 @@ from pathlib import Path
 
 import pytest
 import yaml
-from pyspark.sql import functions as F
 
 from big_data_graph_analysis_with_spark_spark import __main__ as cli
 from big_data_graph_analysis_with_spark_spark.config import SimConfig
-from big_data_graph_analysis_with_spark_spark.model import EDGE_SCHEMA, VERTEX_SCHEMA, NetGraph
-from big_data_graph_analysis_with_spark_spark.operators import graphalg, matching, stats, walks
-from big_data_graph_analysis_with_spark_spark.operators.simrank import init_scores
-from big_data_graph_analysis_with_spark_spark.operators.walk_simrank import walk_simrank_round
+from big_data_graph_analysis_with_spark_spark.operators import graphalg, stats, walk_simrank, walks
 from big_data_graph_analysis_with_spark_spark.plans.pipeline import run_pipeline
 from big_data_graph_analysis_with_spark_spark.sources.ngs_text import load_graph
 from perfbench import gen, oracle
@@ -69,6 +64,9 @@ CASES = {
     "no_sinks": (replace(BASE_SPEC, sink_fraction=0.0), {}),
     "accum_not_dividing_iters": (BASE_SPEC, {"iters": 5, "accum": 2}),
     "more_walks_than_start_nodes": (BASE_SPEC, {"walks": 20}),
+    # the CLI defaults' shape: five rounds, each over the matches of
+    # the rounds before it
+    "five_rounds_carry_over": (BASE_SPEC, {"walks": 20, "iters": 50, "accum": 10}),
 }
 
 
@@ -258,35 +256,6 @@ def test_uncached_sideload_dir_removed_at_exit(tmp_path):
     assert list(tmp_path.glob("bdga_walk_adj_*")) == []
 
 
-def _graph(spark, ids, edges) -> NetGraph:
-    return NetGraph(
-        spark.createDataFrame([(i, 1, 1, 1, 1, 1, 1, 1, 0.5, False) for i in ids], VERTEX_SCHEMA),
-        spark.createDataFrame([(a, b, 0, 0, 0, None, 0.1) for a, b in edges], EDGE_SCHEMA),
-    )
-
-
-def test_walk_simrank_round_identity_wins(spark):
-    """Pair (0, 0) is an identity seed (1.0) and a prior match (0.4);
-    (2, 2) is a seed and computes to 0.5 (one pg parent, two og parents);
-    (4, 5) is only a prior match. The seed must win on both sides of the
-    sweep: as the parent score of (0, 0)'s children, which compute to
-    1.0 (0.4 if the fallback won, 1.4 if both rows were kept), and in the
-    output, where (2, 2) stays 1.0. A fallback-only pair is an input,
-    never an output."""
-    pg = _graph(spark, [0, 1, 2, 4, 8], [(0, 1), (1, 2), (0, 8)])
-    og = _graph(spark, [0, 1, 2, 3, 5, 9], [(0, 1), (1, 2), (3, 2), (0, 9)])
-    walk_nodes = spark.createDataFrame([(7, i) for i in (0, 1, 2, 4, 8)], "walk_id LONG, id LONG")
-    matches = spark.createDataFrame([(0, 0, 0.4), (4, 5, 0.7)], "pg_id LONG, og_id LONG, score DOUBLE")
-    adj = [walks.ensure_sideload(g, cache_key=g) for g in (pg, og)]
-    out = walk_simrank_round(walk_nodes, matches, init_scores(pg, og), *adj).collect()
-    got = {(r["pg_id"], r["og_id"]): r["score"] for r in out}
-    assert len(out) == len(got) and {r["walk_id"] for r in out} == {7}
-    assert got == {
-        (0, 0): 1.0, (1, 1): 1.0, (2, 2): 1.0,
-        (1, 9): 1.0, (8, 1): 1.0, (8, 9): 1.0,
-    }
-
-
 def test_ingest_and_stats_job_counts(spark, tmp_path):
     """Loading one dump validates it in one aggregate action, and the
     statistics block takes four actions (two id lists, the TP/FP counts,
@@ -309,29 +278,41 @@ def test_ingest_and_stats_job_counts(spark, tmp_path):
     assert len(stats_jobs) <= 18
 
 
-def test_simrank_round_job_count(spark, tmp_path):
-    """One SimRank round with prior matches (the later-round plan):
-    the grouped kernel, best match, the valuable filter and the merge
-    checkpoint. AQE runs each shuffle stage as its own job; on this
-    60-vertex pair the round takes 14, and the bound leaves 2 jobs of
-    slack. The declarative 3-way join plan took 29-30."""
+def test_match_stage_job_count(spark, tmp_path):
+    """The whole match stage of a two-round run, every round's sweeps,
+    best match, valuable filter and merge, is one Python task: a
+    checkpoint of one `mapInArrow` over the visited sets, 2 jobs here
+    and 1 of slack. A driver loop with one plan per round (the identity
+    checkpoint, then per round the grouped SimRank kernel, best match,
+    valuable filter and a merge checkpoint) took 25 for the same stage
+    on this pair. The stage's output equals the pipeline's matches."""
     og_path, pg_path = _pair(tmp_path, BASE_SPEC, BASE_CFG["seed"])
     og, pg = load_graph(spark, og_path), load_graph(spark, pg_path)
     cfg = _sim_config(BASE_CFG)
     res = run_pipeline(spark, og, pg, cfg)
-    nodes = walks.walk_visited_sets(res.walk_steps).select(
-        (F.col("partition_key") * cfg.num_iters_per_comp_node + F.col("walk_id")).alias("walk_id"),
-        F.explode("visited").alias("id"),
-    ).localCheckpoint()
-    identity = init_scores(pg, og).localCheckpoint()
+    visited = walks.walk_visited_sets(res.walk_steps).localCheckpoint()
     # the pipeline's own sideloads, keyed on the same graph objects
     adj = [walks.ensure_sideload(g, cache_key=g) for g in (pg, og)]
+    matches, jobs = _jobs_in_group(
+        spark, "walk_simrank-match",
+        lambda: walk_simrank.match_walks(visited, *adj, cfg).localCheckpoint(),
+    )
+    assert sorted(matches.collect()) == sorted(res.matches.collect())
+    assert len(jobs) <= 3, f"match stage took {len(jobs)} jobs"
 
-    def one_round():
-        scores = walk_simrank_round(nodes, res.matches, identity, *adj)
-        best = matching.best_match(scores.select("pg_id", "og_id", "score"), pg, og)
-        valuable = matching.valuable_matches(best, og)
-        return matching.merge_matches(res.matches, valuable).localCheckpoint()
 
-    _, jobs = _jobs_in_group(spark, "walk_simrank-round", one_round)
-    assert len(jobs) <= 16
+WINDOW_LOGGER = "org.apache.spark.sql.execution.window.WindowExec"
+
+
+def test_cli_silences_window_warnings(spark, tmp_path):
+    """The start-node rank window is unpartitioned by design, and Spark
+    warns "No Partition Defined for Window operation" on every plan that
+    holds it: 13 lines on stderr per CLI run. The CLI raises that one
+    logger to ERROR."""
+    jvm = spark.sparkContext._jvm
+    level = jvm.org.apache.logging.log4j.Level
+    jvm.org.apache.logging.log4j.core.config.Configurator.setLevel(WINDOW_LOGGER, level.WARN)
+    og_path, pg_path = _pair(tmp_path, BASE_SPEC, BASE_CFG["seed"])
+    assert cli.main(_cli_args(og_path, pg_path, tmp_path / "stats.yaml", BASE_CFG)) == 0
+    got = jvm.org.apache.logging.log4j.LogManager.getLogger(WINDOW_LOGGER).getLevel()
+    assert got.toString() == "ERROR"

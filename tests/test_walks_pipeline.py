@@ -243,8 +243,8 @@ def test_frontier_tier_exploration_bias(spark):
 def test_pipeline_graph200_deterministic_and_sane(spark):
     og = load_graph(spark, f"{REF_INPUT}/Graph200.txt")
     pg = load_graph(spark, f"{REF_INPUT}/Graph200.txt.perturbed")
-    r1 = run_pipeline(spark, og, pg, CFG, collect_round_counts=True)
-    r2 = run_pipeline(spark, og, pg, CFG, collect_round_counts=True)
+    r1 = run_pipeline(spark, og, pg, CFG)
+    r2 = run_pipeline(spark, og, pg, CFG)
     assert r1.stats == r2.stats  # determinism the reference lacks
     # shape sanity vs the recorded reference runs (output/MitM-statistics.yaml):
     # 103 valuable original nodes; TP >> FP
@@ -255,7 +255,6 @@ def test_pipeline_graph200_deterministic_and_sane(spark):
     assert tp > 0
     assert tp + fp <= 197  # at most one match per perturbed node
     assert int(r1.stats["totalSuccessfulWalks"]) >= 0
-    assert r1.per_round_match_counts == sorted(r1.per_round_match_counts)
 
 
 def test_node2vec_paths_are_valid_and_deterministic(spark):
